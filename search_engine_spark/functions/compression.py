@@ -550,9 +550,10 @@ def decode_docids_blocks(
     doc_deltas: bytes, db_lens: np.ndarray, codec: int = CODEC_VARINT
 ) -> np.ndarray:
     """Decode ONLY the doc-id stream of a blob row — the tf/dl/field
-    streams are never touched. Used by the freshness-window stats pass
-    (query.search_uncompacted): exact live df needs the base doc ids (to
-    subtract delta-superseded docs) but none of the frequency payload.
+    streams are never touched. Used by the union snapshot's per-term
+    stats pass (query._union_snapshot): exact live df needs the base doc
+    ids (to subtract delta-superseded docs) but none of the frequency
+    payload.
     Same per-block layout as decode_posting_blocks with keep=None: each
     block restarts with an absolute (biased) first key, then gaps."""
     db_lens = np.asarray(db_lens, dtype=np.int64)

@@ -661,37 +661,10 @@ def _engine_index(spark: SparkSession, sf_dir: str, codec: str = "varint"):
             F.lit(TITLE_LEN).cast("int").alias("title_dl"),
         )
     )
-    docs.cache()
-    ds = ib.build_doc_stats(docs)
-    ds.write.mode("overwrite").parquet(out.doc_stats)
-    doc_stats = spark.read.parquet(out.doc_stats)
-    n_docs, total_dl, total_dl1 = ib.corpus_totals(doc_stats)
-    avgdl = float(total_dl) / n_docs if n_docs else 0.0
-    avgdl1, avgdlb = ib.field_avgdls(n_docs, total_dl, total_dl1)
-    forward = ib.build_forward(docs, with_positions=True)
-    forward.cache()
-    lex = ib.build_lexicon(forward, 8)
-    lex.write.mode("overwrite").parquet(out.lexicon)
-    lexicon = spark.read.parquet(out.lexicon)
-    postings = ib.build_postings(
-        forward, lexicon, doc_stats, n_salts=4, salt_threshold=100,
-        n_barrels=8, codec=codec,
+    ib.build_index_from_docs(
+        spark, docs, out, n_salts=4, salt_threshold=100, n_barrels=8,
+        id_partitions=8, with_positions=True, codec=codec,
     )
-    postings.write.mode("overwrite").partitionBy("barrel").parquet(out.postings)
-    hb = ib.build_hot_bounds(spark.read.parquet(out.postings), 100)
-    hb.write.mode("overwrite").parquet(out.hot_bounds)
-    ib.build_positions(forward, lexicon, 8).write.mode("overwrite").partitionBy(
-        "barrel"
-    ).parquet(out.positions)
-    from search_engine_spark.functions.compression import codec_id
-
-    ib.write_scalar_parquet(
-        out.stats,
-        ib.STATS_SCHEMA,
-        (n_docs, avgdl, avgdl1, avgdlb, 4, 100, 8, codec_id(codec)),
-    )
-    docs.unpersist()
-    forward.unpersist()
     idx = SearchIndex(spark, out)
     _ENGINE_INDEX_CACHE[key] = idx
     return idx

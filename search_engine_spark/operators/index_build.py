@@ -361,13 +361,6 @@ def corpus_totals(doc_stats: DataFrame) -> tuple[int, int, int]:
     return int(row["n"]), int(row["total"] or 0), int(row["total1"] or 0)
 
 
-def corpus_stats(doc_stats: DataFrame) -> tuple[int, float]:
-    """(N, avgdl) — computed as exact ints then divided in Python so the
-    float64 matches the oracle bit-for-bit."""
-    n, total, _ = corpus_totals(doc_stats)
-    return n, (float(total) / n if n else 0.0)
-
-
 STATS_BASE_SCHEMA = "n_docs long, total_dl long, total_dl1 long"
 STATS_SCHEMA = (
     "n_docs long, avgdl double, avgdl1 double, avgdlb double, "
@@ -803,13 +796,32 @@ def build_index(
     with_positions: bool = False,
     codec: int | str = "varint",
 ) -> dict:
-    """One-shot (non-resumable) build; the resumable barrel-group driver is
-    plans/build_job.py. Returns summary stats. with_positions=True also
-    writes the positional index (phrase queries — query.search_phrase) at
-    the cost of carrying position arrays through the forward shuffle.
-    ``codec``: posting stream compression ("varint" | "pfor"), recorded in
-    stats so compaction preserves it."""
-    docs = normalize_pages(pages)
+    """One-shot (non-resumable) build from raw pages; the resumable
+    barrel-group driver is plans/build_job.py. Returns summary stats.
+    with_positions=True also writes the positional index (phrase queries
+    — query.search_phrase) at the cost of carrying position arrays
+    through the forward shuffle. ``codec``: posting stream compression
+    ("varint" | "pfor"), recorded in stats so compaction preserves it."""
+    return build_index_from_docs(
+        spark, normalize_pages(pages), out, n_salts, salt_threshold,
+        n_barrels, id_partitions, with_positions, codec,
+    )
+
+
+def build_index_from_docs(
+    spark: SparkSession,
+    docs: DataFrame,
+    out: IndexPaths,
+    n_salts: int = 8,
+    salt_threshold: int = 50_000,
+    n_barrels: int = 64,
+    id_partitions: int = 32,
+    with_positions: bool = False,
+    codec: int | str = "varint",
+) -> dict:
+    """build_index's steps over already-normalized docs (doc_id, url,
+    norm, title_dl): doc_stats + stats_base → lexicon → postings →
+    hot_bounds → positions → stats."""
     docs.cache()
     doc_stats = build_doc_stats(docs)
     doc_stats.write.mode("overwrite").parquet(out.doc_stats)
@@ -917,19 +929,7 @@ def build_hot_bounds(
     lists are bounded by salt_threshold.
 
     The field channel (tf1, dl1) rides along so weighted queries get a
-    driver theta too. Legacy blob rows without it (pre-upgrade barrels
-    surviving a partial compaction) contribute NULL elements — NOT
-    zero-fill: a zero-filled channel would let the weighted sketch
-    over-state achieved true-BM25F scores. The query side detects any
-    NULL and skips that term's sketch in weighted mode (theta only
-    drops — always safe)."""
-    null_arr = F.transform("theta_docs", lambda x: F.lit(None).cast("long"))
-
-    def chan(col_name: str):
-        if col_name in postings.columns:
-            return F.coalesce(F.col(col_name), null_arr)
-        return null_arr
-
+    driver theta too."""
     pairs = (
         postings.filter(F.col("df") > salt_threshold)
         .select(
@@ -939,8 +939,8 @@ def build_hot_bounds(
                     F.col("theta_docs").alias("doc"),
                     F.col("theta_tfs").alias("tf"),
                     F.col("theta_dls").alias("dl"),
-                    chan("theta_tf1s").alias("tf1"),
-                    chan("theta_dl1s").alias("dl1"),
+                    F.col("theta_tf1s").alias("tf1"),
+                    F.col("theta_dl1s").alias("dl1"),
                 )
             ).alias("p"),
         )
@@ -997,6 +997,15 @@ def read_stats(spark: SparkSession, out: IndexPaths) -> dict:
 
 
 _PA_TYPES = {"long": "int64", "double": "float64", "int": "int32"}
+
+
+def read_scalar_parquet(path: str) -> dict:
+    """Read a table written by write_scalar_parquet driver-side via
+    pyarrow — no Spark job (a query-path read of stats_base would
+    otherwise cost one)."""
+    import pyarrow.parquet as pq
+
+    return pq.read_table(path).to_pylist()[0]
 
 
 def write_scalar_parquet(path: str, schema: str, row: tuple) -> None:

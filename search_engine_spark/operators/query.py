@@ -16,6 +16,15 @@ Query lifecycle mirrors the reference (SURVEY.md §3.1,
   6. orderBy(score desc, doc_id asc).limit(k) — Catalyst compiles this to
      TakeOrderedAndProject, a distributed per-partition-heap top-k.
 
+Steps 3-6 are ONE pipeline (_search) over a snapshot (_Snapshot): the
+bound terms with their df and (max_tf, min_dl) bounds, N and the avgdls,
+whether the hot-term sketches describe it, and — only while ingest deltas
+are uncompacted — the latest-wins delta rows plus the superseded base doc
+ids to anti-join. search() serves the BASE snapshot (cached lexicon, base
+stats, sketches valid: zero Spark jobs to plan a hot-rarest query);
+search_uncompacted() serves the UNION snapshot (base ∪ deltas, live
+stats). search_phrase binds through the same binder (_bind).
+
 Float discipline: per-posting scores are computed in numpy float64 via the
 single canonical expression (compression.bm25_score == oracle.bm25_contrib
 shape), idf via math.log on both sides, and the per-doc sum is evaluated in
@@ -24,9 +33,10 @@ build-independent order (term_ids shift across incremental builds), equal
 to the oracle's ascending-term_id order since oracle ids are term-sorted.
 
 WAND threshold (theta): a SAFE lower bound of the final kth score — the
-kth-largest single-term score among the rarest (lowest-df) query term's
-postings, computed as a distributed TakeOrdered pass (no blobs on the
-driver). Any block b of term t with block_max(b) + sum_{t' != t}
+kth-largest achieved score of the driver-side hot-term sketches, and/or
+the kth-largest single-term score among the rarest (lowest-df) query
+term's scored rows, computed as a distributed TakeOrdered pass (no blobs
+on the driver). Any block b of term t with block_max(b) + sum_{t' != t}
 max_score(t') < theta cannot contain a top-k doc: such a doc's total
 upper bound sits below theta ≤ the true kth score, so neither dropping
 its t-contribution nor its (under-)scored appearance via other terms can
@@ -36,6 +46,7 @@ in tests/test_wand.py.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
 from typing import Iterator
 
 import numpy as np
@@ -87,11 +98,9 @@ class SearchIndex:
         stats = read_stats(spark, paths)
         self.n_docs = int(stats["n_docs"])
         self.avgdl = float(stats["avgdl"])
-        # per-field corpus averages for the true-BM25F length norm;
-        # legacy stats (pre-upgrade index) lack them — weighted queries
-        # on such an index fail fast in _decode_score_df instead
-        self.avgdl1 = float(stats.get("avgdl1") or 0.0)
-        self.avgdlb = float(stats.get("avgdlb") or 0.0)
+        # per-field corpus averages for the true-BM25F length norm
+        self.avgdl1 = float(stats["avgdl1"])
+        self.avgdlb = float(stats["avgdlb"])
         self.n_barrels = int(stats["n_barrels"])
         self.lexicon = spark.read.parquet(paths.lexicon)
         from search_engine_spark.operators.index_build import read_postings
@@ -112,26 +121,13 @@ class SearchIndex:
         import os
 
         if os.path.exists(paths.hot_bounds):
-            hb_df = spark.read.parquet(paths.hot_bounds)
-
-            def _chan(r, name):
-                # a NULL element marks a pre-upgrade sketch row: the
-                # channel is unusable for that term (weighted theta skips
-                # it — never zero-filled, which could over-state scores)
-                if name not in hb_df.columns:
-                    return None
-                vals = r[name]
-                if vals is None or any(v is None for v in vals):
-                    return None
-                return np.asarray(vals, dtype=np.float64)
-
-            for r in hb_df.take(max_hot_terms):
+            for r in spark.read.parquet(paths.hot_bounds).take(max_hot_terms):
                 self.hot_bounds[int(r["term_id"])] = (
                     np.asarray(r["docs"], dtype=np.int64),
                     np.asarray(r["tfs"], dtype=np.float64),
                     np.asarray(r["dls"], dtype=np.float64),
-                    _chan(r, "tf1s"),
-                    _chan(r, "dl1s"),
+                    np.asarray(r["tf1s"], dtype=np.float64),
+                    np.asarray(r["dl1s"], dtype=np.float64),
                 )
         self._local_lexicon: dict[str, dict] | None = None
         if local_lexicon_max_rows:
@@ -139,16 +135,12 @@ class SearchIndex:
             # it (count()+collect() would scan twice on every open/refresh)
             rows = self.lexicon.take(local_lexicon_max_rows + 1)
             if len(rows) <= local_lexicon_max_rows:
-                has_bounds = "max_tf" in self.lexicon.columns
-                self._local_lexicon = {
-                    r["term"]: {
-                        "term_id": int(r["term_id"]),
-                        "df": int(r["df"]),
-                        "max_tf": int(r["max_tf"]) if has_bounds else None,
-                        "min_dl": int(r["min_dl"]) if has_bounds else None,
-                    }
-                    for r in rows
-                }
+                self._local_lexicon = {r["term"]: _lex_entry(r) for r in rows}
+
+    @property
+    def avgdls(self) -> tuple[float, float, float]:
+        """Base-snapshot (avgdl, avgdl1, avgdlb)."""
+        return self.avgdl, self.avgdl1, self.avgdlb
 
     def refresh(self) -> "SearchIndex":
         """Re-open after an incremental ingest/compaction changed the
@@ -186,40 +178,42 @@ class SearchIndex:
         'embed' would re-stem), so re-normalizing a corrected term could
         silently un-bind it."""
         if isinstance(query, (list, tuple, set)):
-            tokens = sorted({t for t in query if t})
-        else:
-            tokens = sorted(
-                {t for t in normalize_text(query).split(" ") if t}
-            )
-        if not tokens:
-            return {}
-        if self._local_lexicon is not None:
-            return {
-                e["term_id"]: {
-                    "term": t,
-                    **{k: e[k] for k in ("df", "max_tf", "min_dl")},
-                }
-                for t in tokens
-                if (e := self._local_lexicon.get(t)) is not None
-            }
-        cols = ["term", "term_id", "df"]
-        has_bounds = "max_tf" in self.lexicon.columns
-        if has_bounds:
-            cols += ["max_tf", "min_dl"]
-        rows = (
-            self.lexicon.filter(F.col("term").isin(tokens))
-            .select(*cols)
-            .collect()
-        )
-        return {
-            int(r["term_id"]): {
-                "term": r["term"],
-                "df": int(r["df"]),
-                "max_tf": int(r["max_tf"]) if has_bounds else None,
-                "min_dl": int(r["min_dl"]) if has_bounds else None,
-            }
-            for r in rows
-        }
+            return _bind(self, sorted({t for t in query if t}))
+        return _bind(self, _tokens(query))
+
+
+_LEX_COLS = ["term", "term_id", "df", "max_tf", "min_dl"]
+
+
+def _lex_entry(r) -> dict:
+    return {c: int(r[c]) for c in _LEX_COLS[1:]}
+
+
+def _tokens(query: str) -> list[str]:
+    return sorted({t for t in normalize_text(query).split(" ") if t})
+
+
+def _bind(
+    index: SearchIndex, tokens: list[str], lexicon: DataFrame | None = None
+) -> dict[int, dict]:
+    """Sorted normalized tokens -> {term_id: {term, df, max_tf, min_dl}}
+    for the tokens in ``lexicon`` (None: the base lexicon, served from the
+    cached driver dict when it is resident; the union snapshot passes base
+    ∪ delta extensions, where the cached dict would miss new terms). Other
+    lexicons bind with one pushed-down IN-filter scan."""
+    if not tokens:
+        return {}
+    if lexicon is None and index._local_lexicon is not None:
+        hits = [(t, index._local_lexicon.get(t)) for t in tokens]
+    else:
+        lex = index.lexicon if lexicon is None else lexicon
+        rows = lex.filter(F.col("term").isin(tokens)).select(*_LEX_COLS)
+        hits = [(r["term"], _lex_entry(r)) for r in rows.collect()]
+    return {
+        e["term_id"]: {"term": t, **{c: e[c] for c in _LEX_COLS[2:]}}
+        for t, e in hits
+        if e is not None
+    }
 
 
 def _probe(index: SearchIndex, term_ids: list[int]) -> DataFrame:
@@ -230,21 +224,26 @@ def _probe(index: SearchIndex, term_ids: list[int]) -> DataFrame:
     )
 
 
+def _norms(avgdls: tuple[float, float, float]) -> tuple[float, float, float]:
+    """(avgdl, avgdl1, avgdlb) with zero per-field averages guarded to 1.0
+    (field absent corpus-wide ⇒ its tf is identically 0; the guard
+    prevents NaN, the same guard the oracle and the SQL apply)."""
+    avgdl, avgdl1, avgdlb = avgdls
+    return avgdl, avgdl1 or 1.0, avgdlb or 1.0
+
+
 def _decode_score_df(
-    index: SearchIndex,
     probe: DataFrame,
     idfs: dict[int, float],
     theta: float,
     other_max: dict[int, float],
-    ranks: dict[int, int] | None = None,
-    field_weights: tuple[float, float] | None = None,
-    stats: tuple[float, float, float] | None = None,
+    ranks: dict[int, int],
+    field_weights: tuple[float, float] | None,
+    avgdls: tuple[float, float, float],
 ) -> DataFrame:
     """mapInPandas: blob rows -> (doc_id, rank, score) with block-max
     skipping. other_max[t] = sum of max_score over the OTHER query terms.
-    ``stats`` = (avgdl, avgdl1, avgdlb) overrides the index's base-snapshot
-    corpus averages — the freshness window (search_uncompacted) scores and
-    bounds under LIVE union statistics; None keeps the base stats.
+    ``avgdls`` = (avgdl, avgdl1, avgdlb) of the snapshot being served.
     ``ranks`` maps term_id -> the term's position in SORTED-BY-STRING
     query-term order — a build-independent key for the deterministic
     per-doc float sum (term_ids are NOT stable across incremental builds:
@@ -260,18 +259,7 @@ def _decode_score_df(
     each field tf and decreasing in each field length, so
     bm25f(max_tf1, max_tf, min_dl1, min_dlb) bounds every posting in the
     block (body tf ≤ tf, so block_max_tf bounds it)."""
-    # guard zero per-field averages to 1.0 (field absent corpus-wide ⇒
-    # its tf is identically 0; the guard prevents NaN, the same guard the
-    # oracle and the SQL apply)
-    if stats is not None:
-        avgdl, avgdl1, avgdlb = stats
-        avgdl1 = avgdl1 or 1.0
-        avgdlb = avgdlb or 1.0
-    else:
-        avgdl = index.avgdl
-        avgdl1 = index.avgdl1 or 1.0
-        avgdlb = index.avgdlb or 1.0
-    ranks = ranks or {}
+    avgdl, avgdl1, avgdlb = _norms(avgdls)
     fw = field_weights
     # column pruning BELOW the Arrow boundary: mapInPandas ships every
     # column of its input to Python, so an unpruned probe would transfer
@@ -286,12 +274,6 @@ def _decode_score_df(
 
     cols = DECODE_BASE_COLS + DECODE_BOUND_COLS
     if fw is not None:
-        if "dls1" not in probe.columns:
-            raise ValueError(
-                "field-weighted search needs the per-field length stream "
-                "(dls1) — rebuild or compact this index with the current "
-                "version"
-            )
         cols = cols + DECODE_FIELD_BOUND_COLS + DECODE_TF1_COLS
     probe = probe.select(*cols)
 
@@ -308,12 +290,6 @@ def _decode_score_df(
                 mt = np.asarray(row.block_max_tf, dtype=np.float64)
                 md = np.asarray(row.block_min_dl, dtype=np.float64)
                 if fw is not None:
-                    if row.dls1 is None:
-                        raise ValueError(
-                            "mixed-format barrel: a posting row lacks the "
-                            "per-field length stream — run compact() to "
-                            "upgrade it before field-weighted search"
-                        )
                     w_t, w_b = fw
                     mt1 = np.asarray(row.block_max_tf1, dtype=np.float64)
                     md1 = np.asarray(row.block_min_dl1, dtype=np.float64)
@@ -359,7 +335,7 @@ def _decode_score_df(
                     score = bm25_score(t, l, idf, avgdl, K1, B)
                 out_doc.append(d)
                 out_rank.append(
-                    np.full(len(d), ranks.get(tid, tid), dtype=np.int64)
+                    np.full(len(d), ranks[tid], dtype=np.int64)
                 )
                 out_score.append(score)
             if out_doc:
@@ -374,42 +350,6 @@ def _decode_score_df(
     return probe.mapInPandas(decode, schema="doc_id long, rank long, score double")
 
 
-def _estimate_theta(
-    index: SearchIndex,
-    probe: DataFrame,
-    rarest: int,
-    idfs: dict[int, float],
-    k: int,
-    field_weights: tuple[float, float] | None = None,
-    doc_ids: DataFrame | None = None,
-) -> float:
-    """Distributed pass-1: kth-largest BM25 score among the RAREST query
-    term's postings — a SAFE lower bound on the true kth top-k score (k
-    docs achieve at least their rarest-term contribution, and scores are
-    non-negative, so the true kth total ≥ this theta).
-
-    With a metadata ``doc_ids`` filter the pass applies the SAME
-    semi-join below the top-k: theta must lower-bound the kth FILTERED
-    score (an unfiltered theta could exceed it and over-prune).
-
-    Runs as orderBy(desc).limit(k) over the decoded rarest-term postings —
-    TakeOrderedAndProject, per-partition heaps; NO posting blobs ever reach
-    the driver (the previous design collected every query term's blobs
-    driver-side, which breaks at Zipf-head posting-list sizes)."""
-    scored = _decode_score_df(
-        index, probe.filter(F.col("term_id") == F.lit(rarest)), idfs, 0.0, {},
-        field_weights=field_weights,
-    )
-    if doc_ids is not None:
-        scored = scored.join(
-            F.broadcast(doc_ids.select("doc_id")), "doc_id", "left_semi"
-        )
-    rows = scored.select("score").orderBy(F.desc("score")).limit(k).collect()
-    if len(rows) < k:
-        return 0.0
-    return float(rows[-1]["score"])
-
-
 def _sketch_theta(
     index: SearchIndex,
     term_ids: list[int],
@@ -419,7 +359,8 @@ def _sketch_theta(
 ) -> float:
     """Driver-side theta from the hot-term sketches: accumulate ACHIEVED
     BM25 partial sums per doc over every query term's stored real
-    postings (live idf/avgdl), take the kth largest. Zero Spark jobs.
+    postings (base idf/avgdl — the sketches describe the base snapshot
+    only), take the kth largest. Zero Spark jobs.
 
     Safe: each stored (doc, tf, dl) is a real posting, so each per-doc
     sum is ≤ that doc's true total score; k distinct docs achieving
@@ -427,10 +368,8 @@ def _sketch_theta(
 
     With field_weights the achieved score uses the SAME true-BM25F
     per-field norm the decode scores with (the sketch stores the real
-    (tf1, dl1) channel per posting). A sketch whose field channel is
-    NULL (pre-upgrade rows — build_hot_bounds preserves the null rather
-    than zero-filling, which could over-state achieved scores) is
-    skipped: theta only drops, staying a valid lower bound."""
+    (tf1, dl1) channel per posting)."""
+    avgdl, avgdl1, avgdlb = _norms(index.avgdls)
     acc: dict[int, float] = {}
     for tid in term_ids:
         hb = index.hot_bounds.get(tid)
@@ -438,15 +377,13 @@ def _sketch_theta(
             continue
         d, tf, dl, tf1, dl1 = hb
         if field_weights is not None:
-            if tf1 is None or dl1 is None:
-                continue
             w_t, w_b = field_weights
             score = bm25f_score(
                 tf1, tf - tf1, dl1, dl - dl1, idfs[tid], w_t, w_b,
-                index.avgdl1 or 1.0, index.avgdlb or 1.0, K1, B,
+                avgdl1, avgdlb, K1, B,
             )
         else:
-            score = bm25_score(tf, dl, idfs[tid], index.avgdl, K1, B)
+            score = bm25_score(tf, dl, idfs[tid], avgdl, K1, B)
         for doc, sc in zip(d.tolist(), score.tolist()):
             acc[doc] = acc.get(doc, 0.0) + sc
     if len(acc) < k:
@@ -456,48 +393,188 @@ def _sketch_theta(
     return heapq.nlargest(k, acc.values())[-1]
 
 
-def _probe_term_bounds(
-    probe: DataFrame,
+def _score_rows(
+    rows: DataFrame,
     idfs: dict[int, float],
-    avgdl: float,
-    field_weights: tuple[float, float] | None = None,
-) -> dict[int, float]:
-    """Fallback per-term upper bounds via a probe metadata aggregate (for
-    indexes whose lexicon lacks max_tf/min_dl, or terms whose postings
-    were fully tombstoned). Under true-BM25F field weighting the safe
-    term bound uses the B_f ≥ (1−b) floor: tfn = w_t·tf1/B1 + w_b·tfb/B0
-    ≤ (w_t + w_b)·max_tf/(1−b) (each field tf ≤ tf) — forgetting this
-    would under-estimate other_max and over-prune (lossy weighted
-    top-k)."""
-    out = {}
-    for r in (
-        probe.groupBy("term_id")
-        .agg(F.max("max_tf").alias("mt"), F.min("min_dl").alias("md"))
-        .collect()
-    ):
-        tid = int(r["term_id"])
-        if field_weights is not None:
-            out[tid] = _weighted_term_bound(
-                float(r["mt"]), idfs[tid], field_weights
+    ranks: dict[int, int],
+    field_weights: tuple[float, float] | None,
+    avgdls: tuple[float, float, float],
+) -> DataFrame:
+    """Uncompressed delta posting rows -> (doc_id, rank, score) with the
+    same numpy kernels and snapshot stats as the blob decode."""
+    avgdl, avgdl1, avgdlb = _norms(avgdls)
+    fw = field_weights
+    cols = ["term_id", "doc_id", "tf", "dl"] + (
+        ["tf1", "dl1"] if fw is not None else []
+    )
+
+    def score_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            idf = pdf["term_id"].map(idfs).to_numpy(dtype=np.float64)
+            tf = pdf["tf"].to_numpy(dtype=np.float64)
+            dl = pdf["dl"].to_numpy(dtype=np.float64)
+            if fw is not None:
+                w_t, w_b = fw
+                t1 = pdf["tf1"].to_numpy(dtype=np.float64)
+                d1 = pdf["dl1"].to_numpy(dtype=np.float64)
+                score = bm25f_score(
+                    t1, tf - t1, d1, dl - d1, idf, w_t, w_b,
+                    avgdl1, avgdlb, K1, B,
+                )
+            else:
+                score = bm25_score(tf, dl, idf, avgdl, K1, B)
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"].to_numpy(),
+                    "rank": pdf["term_id"].map(ranks).to_numpy(dtype=np.int64),
+                    "score": score,
+                }
             )
-        else:
-            mt = np.array([float(r["mt"])])
-            md = np.array([float(r["md"])])
-            out[tid] = float(bm25_score(mt, md, idfs[tid], avgdl, K1, B)[0])
-    return out
+
+    return rows.select(*cols).mapInPandas(
+        score_rows, schema="doc_id long, rank long, score double"
+    )
 
 
-def _weighted_term_bound(
-    max_tf: float, idf: float, field_weights: tuple[float, float]
+def _term_bound(
+    b: dict, idf: float, avgdl: float, field_weights: tuple[float, float] | None
 ) -> float:
-    """Safe term-level upper bound for true-BM25F scoring: with each
-    field's normalizer floored at (1−b) and both field tfs ≤ max_tf,
-    tfn ≤ (w_t + w_b)·max_tf/(1−b); the saturated score is increasing in
-    tfn. Looser than the per-block bound (which has real per-field
+    """Upper bound on one term's score in any doc, from the snapshot's
+    (max_tf, min_dl) for it, scored with the snapshot's idf/avgdl (valid
+    by BM25 monotonicity). A term with max_tf <= 0 has no postings: 0.0.
+
+    Under true-BM25F weighting only max_tf is usable: with each field's
+    normalizer floored at (1−b) and both field tfs ≤ max_tf,
+    tfn ≤ (w_t + w_b)·max_tf/(1−b), and the saturated score is increasing
+    in tfn. Looser than the per-block bound (which has real per-field
     extrema) — it only gates which BLOCKS get the tight check."""
-    w_t, w_b = field_weights
-    tfn = (w_t + w_b) * max_tf / (1.0 - B)
-    return idf * (tfn * (K1 + 1.0)) / (tfn + K1)
+    mt = float(b["max_tf"])
+    if mt <= 0:
+        return 0.0
+    if field_weights is not None:
+        w_t, w_b = field_weights
+        tfn = (w_t + w_b) * mt / (1.0 - B)
+        return idf * (tfn * (K1 + 1.0)) / (tfn + K1)
+    md = np.array([float(b["min_dl"])])
+    return float(bm25_score(np.array([mt]), md, idf, avgdl, K1, B)[0])
+
+
+@dataclass
+class _Snapshot:
+    """What one term query is scored against. ``bound``: {term_id: {term,
+    df, max_tf, min_dl}} with this snapshot's df and bounds; ``avgdls``:
+    (avgdl, avgdl1, avgdlb); ``sketches``: the index's hot-term sketches
+    describe this snapshot (base stats only). Only while ingest deltas
+    are uncompacted: ``delta_rows`` (latest-wins uncompressed postings of
+    the bound terms) and ``superseded`` (doc ids whose base postings are
+    replaced or tombstoned)."""
+
+    bound: dict[int, dict]
+    n_docs: int
+    avgdls: tuple[float, float, float]
+    sketches: bool
+    delta_rows: DataFrame | None = None
+    superseded: DataFrame | None = None
+
+
+def _search(
+    index: SearchIndex,
+    snap: _Snapshot,
+    k: int,
+    mode: str,
+    use_wand: bool,
+    field_weights: tuple[float, float] | None,
+    doc_ids: DataFrame | None,
+) -> DataFrame:
+    """The BM25 term-query pipeline over one snapshot: idf from the
+    snapshot df → per-term bounds → theta → decode (base blobs minus
+    superseded docs, plus delta rows) → optional doc_ids semi-join →
+    _sum_topk.
+
+    Theta (multi-term OR with WAND only): the driver sketch when the
+    sketches describe the snapshot and there is no doc_ids filter (the
+    sketch ignores the filter, so its kth achieved score may exceed the
+    kth FILTERED score and over-prune), plus the distributed rarest-term
+    pass over the snapshot's scored rows — filter applied — whenever the
+    rarest term has no usable sketch. A cold rarest term's list is
+    bounded by salt_threshold, so that pass is cheap and usually
+    tighter."""
+    bound = snap.bound
+    if not bound:
+        return index.spark.createDataFrame([], "doc_id long, score double")
+    term_ids = sorted(bound)
+    idfs = {tid: idf_value(b["df"], snap.n_docs) for tid, b in bound.items()}
+    # per-doc sum in SORTED-TERM-STRING order: matches the oracle (its ids
+    # are sorted by term) and is identical across batch/incremental builds
+    ranks = {
+        tid: i
+        for i, tid in enumerate(
+            sorted(term_ids, key=lambda t: bound[t]["term"])
+        )
+    }
+    probe = _probe(index, term_ids)
+
+    def scored(
+        tids: list[int], theta: float, other_max: dict[int, float]
+    ) -> DataFrame:
+        p = probe if tids == term_ids else probe.filter(
+            F.col("term_id").isin(tids)
+        )
+        rows = _decode_score_df(
+            p, idfs, theta, other_max, ranks, field_weights, snap.avgdls
+        )
+        if snap.delta_rows is not None:
+            # latest version wins: base rows of re-ingested or tombstoned
+            # docs drop out (broadcast anti-join on the small delta doc
+            # set), their delta rows take their place
+            delta = snap.delta_rows.filter(F.col("term_id").isin(tids))
+            rows = rows.join(
+                F.broadcast(snap.superseded), "doc_id", "left_anti"
+            ).unionByName(
+                _score_rows(delta, idfs, ranks, field_weights, snap.avgdls)
+            )
+        if doc_ids is not None:
+            # metadata filter below the aggregation: pruned docs never
+            # enter the per-doc sum or the top-k heaps
+            rows = rows.join(
+                F.broadcast(doc_ids.select("doc_id")), "doc_id", "left_semi"
+            )
+        return rows
+
+    theta = 0.0
+    other_max: dict[int, float] = {}
+    if use_wand and len(term_ids) > 1 and mode == "OR":
+        maxes = {
+            tid: _term_bound(
+                bound[tid], idfs[tid], snap.avgdls[0], field_weights
+            )
+            for tid in term_ids
+        }
+        other_max = {
+            tid: sum(v for t2, v in maxes.items() if t2 != tid)
+            for tid in term_ids
+        }
+        rarest = min(term_ids, key=lambda t: (bound[t]["df"], t))
+        sketch_ok = snap.sketches and doc_ids is None
+        if sketch_ok:
+            theta = _sketch_theta(index, term_ids, idfs, k, field_weights)
+        if not (sketch_ok and rarest in index.hot_bounds):
+            # kth-largest single-term score of the rarest term: k docs
+            # achieve at least it and scores are non-negative, so it
+            # lower-bounds the true kth total (TakeOrderedAndProject —
+            # no posting blobs reach the driver)
+            top = (
+                scored([rarest], 0.0, {})
+                .select("score")
+                .orderBy(F.desc("score"))
+                .limit(k)
+                .collect()
+            )
+            if len(top) == k:
+                theta = max(theta, float(top[-1]["score"]))
+    return _sum_topk(scored(term_ids, theta, other_max), len(term_ids), mode, k)
 
 
 def search(
@@ -534,104 +611,22 @@ def search(
     returned ``score`` column stays the raw float64 (bit-equal to the
     single-node oracle). Ordering by the raw float would let two docs
     whose scores round equal straddle rank k differently across
-    engines."""
+    engines.
+
+    Serves the BASE snapshot: between ingest and compact() the index's
+    cached lexicon, base stats and hot-term sketches stay valid, so
+    planning a hot-rarest query costs zero Spark jobs
+    (search_uncompacted serves the union)."""
     index.check_epoch()
-    spark = index.spark
-    bound = index.bind_terms(query)
-    if not bound:
-        return spark.createDataFrame([], "doc_id long, score double")
-    term_ids = sorted(bound)
-    idfs = {tid: idf_value(b["df"], index.n_docs) for tid, b in bound.items()}
-
-    probe = _probe(index, term_ids)
-    theta = 0.0
-    other_max: dict[int, float] = {}
-    if use_wand and len(term_ids) > 1 and mode == "OR":
-        # per-term global upper bound from the lexicon's (max_tf, min_dl)
-        # term bounds — no metadata job; bound uses live idf/avgdl
-        maxes = {}
-        for tid in term_ids:
-            mt = bound[tid]["max_tf"]
-            md = bound[tid]["min_dl"]
-            if mt is None or md is None or mt <= 0:
-                # lexicon without term bounds, or a term whose postings
-                # were fully tombstoned (df=0 after a full-merge
-                # compaction): fall back to a probe metadata aggregate
-                # (weight-aware — see _probe_term_bounds)
-                maxes = _probe_term_bounds(
-                    probe, idfs, index.avgdl, field_weights
-                )
-                break
-            if field_weights is not None:
-                # lexicon stores only max_tf: use the (1−b)-floored
-                # true-BM25F term bound (block-level bounds are tighter
-                # via the per-field block extrema)
-                maxes[tid] = _weighted_term_bound(
-                    float(mt), idfs[tid], field_weights
-                )
-            else:
-                maxes[tid] = float(
-                    bm25_score(
-                        np.array([float(mt)]), np.array([float(md)]),
-                        idfs[tid], index.avgdl, K1, B,
-                    )[0]
-                )
-        other_max = {
-            tid: sum(v for t2, v in maxes.items() if t2 != tid)
-            for tid in term_ids
-        }
-        rarest = min(bound, key=lambda t: (bound[t]["df"], t))
-        # the driver sketch serves unweighted AND weighted queries (its
-        # real (tf1, dl1) channel reproduces the decode's true-BM25F
-        # scores exactly; pre-upgrade sketch rows carry NULL channels and
-        # are skipped per term — _sketch_theta). FILTERED queries can't
-        # use it: the sketch ignores the doc_ids set, so its kth achieved
-        # score may exceed the kth FILTERED score and over-prune — they
-        # keep the distributed rarest-term pass, which scores real
-        # filtered postings.
-        sketch_ok = doc_ids is None
-        if sketch_ok:
-            theta = _sketch_theta(index, term_ids, idfs, k, field_weights)
-            if rarest not in index.hot_bounds:
-                # cold rarest term: its list is bounded by salt_threshold,
-                # so the distributed pass is cheap — and usually tighter
-                theta = max(
-                    theta,
-                    _estimate_theta(
-                        index, probe, rarest, idfs, k,
-                        field_weights=field_weights,
-                    ),
-                )
-        else:
-            theta = _estimate_theta(
-                index, probe, rarest, idfs, k,
-                field_weights=field_weights, doc_ids=doc_ids,
-            )
-
-    # per-doc sum in SORTED-TERM-STRING order: matches the oracle (its ids
-    # are sorted by term) and is identical across batch/incremental builds
-    ranks = {
-        tid: i
-        for i, tid in enumerate(
-            sorted(term_ids, key=lambda t: bound[t]["term"])
-        )
-    }
-    scored = _decode_score_df(
-        index, probe, idfs, theta, other_max, ranks,
-        field_weights=field_weights,
+    snap = _Snapshot(
+        index.bind_terms(query), index.n_docs, index.avgdls, sketches=True
     )
-    if doc_ids is not None:
-        # metadata filter below the aggregation: pruned docs never enter
-        # the per-doc sum or the top-k heaps
-        scored = scored.join(
-            F.broadcast(doc_ids.select("doc_id")), "doc_id", "left_semi"
-        )
-    return _sum_topk(scored, len(term_ids), mode, k)
+    return _search(index, snap, k, mode, use_wand, field_weights, doc_ids)
 
 
 def _sum_topk(scored: DataFrame, n_bound: int, mode: str, k: int) -> DataFrame:
     """(doc_id, rank, score) partials -> ordered top-k: per-doc sum in
-    rank order (build-independent, oracle-bit-equal — see search()),
+    rank order (build-independent, oracle-bit-equal — see _search()),
     AND-mode term-count intersection, TakeOrderedAndProject on the 6-dp
     rounded key."""
     per_doc = scored.groupBy("doc_id").agg(
@@ -663,275 +658,103 @@ def search_uncompacted(
     use_wand: bool = True,
 ) -> DataFrame:
     """BM25 term search over the UNION corpus (base ∪ un-compacted ingest
-    deltas) — the term-side twin of search_phrase's union snapshot,
-    closing the freshness asymmetry where term queries served exactly the
-    base snapshot until compact().
+    deltas): search()'s pipeline over the union snapshot, the term-side
+    twin of search_phrase's union view. With no deltas it is search().
 
-    Exactness: df per term is counted live — base df from the blob
-    metadata (Σ n_docs) minus the delta-superseded docs present in the
-    term's base list (a doc-id-only decode pass, tf/dl streams untouched)
-    plus the latest-wins delta rows; N/avgdl (and the per-field averages
-    for BM25F) come from uncompacted_snapshot's exact-int fold; every
-    posting is scored by the SAME canonical numpy kernel the compacted
-    decode uses — so results are bit-equal to compact() + search()
-    (tests/test_streaming).
+    Exactness: df per term is counted live — the base lexicon df minus
+    the delta-superseded docs present in the term's base list (a
+    doc-id-only decode pass, tf/dl streams untouched) plus the
+    latest-wins delta rows; N/avgdl (and the per-field averages for
+    BM25F) come from uncompacted_snapshot's exact-int fold; base blobs
+    and delta rows are scored by the SAME canonical numpy kernel — so
+    results are bit-equal to compact() + search() (tests/test_streaming).
 
-    Delta-aware WAND (round 4, VERDICT r3 #6): the base-stats theta
-    sketches and lexicon term bounds are UNUSABLE here (a changed
-    N/avgdl/df moves every bound), so this path recomputes everything
-    under LIVE union stats driver-side: per-term score bounds from the
-    blob metadata extrema ∪ delta extrema (raw max_tf/min_dl are
-    stats-independent, the score bound is evaluated with live idf/avgdl —
-    valid by BM25 monotonicity), theta from the kth-best live score of
-    the rarest term's union rows (the standard safe lower bound), pruning
-    relaxed by the 6-dp rounding quantum exactly like the compacted
-    decode. Skipped blocks are never decompressed. A metadata doc_ids
-    filter applies the same semi-join inside the theta pass (an
-    unfiltered theta could over-prune — search()'s caveat).
+    WAND: the hot-term sketches were computed under base stats and do
+    not describe the union, so theta always comes from the rarest-term
+    pass over the union rows; per-term bounds are the base lexicon
+    extrema ∪ the delta extrema, scored with live idf/avgdl (valid by
+    BM25 monotonicity).
 
-    Cost model: ONE tiny driver stats job (round 5, VERDICT r4 #6 — the
-    metadata agg over ≤ a few blob rows/term, the superseded-overlap
-    count via the id-only decode, and the delta per-term stats union
-    into a single tagged collect) plus the rarest-term theta pass buy
-    block skipping on the dominant base decode; delta rows are small by
+    Cost model: uncompacted_snapshot's one small union-stats aggregate,
+    the union lexicon bind, ONE tagged per-term stats collect, plus the
+    rarest-term theta pass for multi-term OR; delta rows are small by
     construction and always score. compact() restores the sketch-served
-    zero-job path. Latest-version-wins: base scores of re-ingested or
-    tombstoned docs are anti-joined out on the (broadcast, tiny) delta
-    doc set, exactly like the positional path.
+    zero-job path.
 
     Corner: a term whose postings are ALL tombstoned but not yet
     compacted still binds here (df 0 after the anti-join, contributes no
     rows); in AND mode it empties the result until compact() drops it
     from the lexicon — the conservative reading of an in-flux corpus."""
     index.check_epoch()
-    spark = index.spark
     from search_engine_spark.streaming import incremental as inc
 
-    snap = inc.uncompacted_snapshot(spark, index.paths)
-    if snap is None:
-        return search(
-            index, query, k=k, mode=mode, field_weights=field_weights,
-            doc_ids=doc_ids,
-        )
-    tokens = sorted({t for t in normalize_text(query).split(" ") if t})
-    empty = spark.createDataFrame([], "doc_id long, score double")
-    if not tokens:
-        return empty
-    # bind via the base ∪ delta lexicon (new terms must bind; the cached
-    # driver lexicon is stale while deltas exist)
-    bound = {
-        int(r["term_id"]): r["term"]
-        for r in snap["lexicon"]
-        .filter(F.col("term").isin(tokens))
-        .select("term", "term_id")
-        .collect()
-    }
+    union = inc.uncompacted_snapshot(index.spark, index.paths)
+    if union is None:
+        return search(index, query, k, mode, use_wand, field_weights, doc_ids)
+    snap = _union_snapshot(index, union, _tokens(query))
+    return _search(index, snap, k, mode, use_wand, field_weights, doc_ids)
+
+
+def _union_snapshot(
+    index: SearchIndex, union: dict, tokens: list[str]
+) -> _Snapshot:
+    """Bind ``tokens`` against the base ∪ delta lexicon (new terms must
+    bind; the cached driver lexicon is stale while deltas exist) and
+    fold the deltas into each bound term's df and (max_tf, min_dl). The
+    per-term fold — base postings of superseded docs (doc-id-only
+    decode) counted −1, latest-wins delta rows +1 with their tf/dl —
+    reaches the driver in ONE collect."""
+    from search_engine_spark.streaming import incremental as inc
+
+    avgdls = (union["avgdl"], union["avgdl1"], union["avgdlb"])
+    bound = _bind(index, tokens, union["lexicon"])
     if not bound:
-        return empty
-    term_ids = sorted(bound)
-    ranks = {
-        tid: i
-        for i, tid in enumerate(sorted(term_ids, key=lambda t: bound[t]))
-    }
+        return _Snapshot({}, union["n_docs"], avgdls, sketches=False)
     # postings-delta torn-log guard (the term-side analogue of the
     # positional guard) — owned by the delta-log layer
     inc.check_postings_log(index.paths)
-    cols = ["term_id", "doc_id", "tf", "tf1", "dl", "dl1"]
-    probe = _probe(index, term_ids)
-    if field_weights is not None and "dls1" not in probe.columns:
-        raise ValueError(
-            "field-weighted search needs the per-field length stream "
-            "(dls1) — rebuild or compact this index with the current "
-            "version"
-        )
-    n_docs, avgdl = snap["n_docs"], snap["avgdl"]
-    live_stats = (avgdl, snap["avgdl1"] or 1.0, snap["avgdlb"] or 1.0)
-    fw = field_weights
-
-    # ---- live per-term stats, driver-side, in ONE Spark job (round 5,
-    # VERDICT r4 #6 — was three collects, tripling the per-query
-    # scheduling floor in the freshness window): the three tiny
-    # aggregates — base df + raw bound extrema from blob METADATA (no
-    # payload decode), the delta-superseded overlap per term's base list
-    # (doc-id-only decode; payload streams stay in parquet), and the
-    # latest-wins delta per-term stats — union into one tagged frame and
-    # one collect (tests/test_streaming.py pins the job count).
+    term_ids = sorted(bound)
     deltas = inc._read_deltas_with_seq(
-        spark, index.paths, inc.delta_dir(index.paths)
+        index.spark, index.paths, inc.delta_dir(index.paths)
     )
     delta_rows = (
         inc._latest_per_doc(deltas)
         .filter(F.col("term_id").isin(term_ids))
-        .select(*cols)
+        .select("term_id", "doc_id", "tf", "tf1", "dl", "dl1")
         .localCheckpoint(eager=False)
     )
-    lc = lambda c: F.col(c).cast("long")  # noqa: E731 — union type align
-    stats_frame = (
-        probe.groupBy("term_id")
-        .agg(
-            F.sum("n_docs").alias("a"),
-            F.max(F.array_max("block_max_tf")).alias("b"),
-            F.min(F.array_min("block_min_dl")).alias("c"),
-        )
-        .select(F.lit("meta").alias("src"), "term_id", lc("a"), lc("b"), lc("c"))
-        .unionByName(
-            inc.decode_docid_rows(probe)
-            .join(F.broadcast(snap["delta_doc_ids"]), "doc_id", "left_semi")
-            .groupBy("term_id")
-            .agg(F.count("*").alias("a"))
-            .select(
-                F.lit("overlap").alias("src"),
-                "term_id",
-                lc("a"),
-                F.lit(None).cast("long").alias("b"),
-                F.lit(None).cast("long").alias("c"),
-            )
-        )
-        .unionByName(
-            delta_rows.groupBy("term_id")
-            .agg(
-                F.count("*").alias("a"),
-                F.max("tf").alias("b"),
-                F.min("dl").alias("c"),
-            )
-            .select(
-                F.lit("delta").alias("src"), "term_id", lc("a"), lc("b"), lc("c")
-            )
+    superseded = (
+        inc.decode_docid_rows(_probe(index, term_ids))
+        .join(F.broadcast(union["delta_doc_ids"]), "doc_id", "left_semi")
+        .select(
+            "term_id",
+            F.lit(-1).alias("n"),
+            F.lit(None).cast("int").alias("tf"),
+            F.lit(None).cast("long").alias("dl"),
         )
     )
-    meta: dict[int, tuple[int, int, int]] = {}
-    overlap: dict[int, int] = {}
-    dstats: dict[int, tuple[int, int, int]] = {}
-    for r in stats_frame.collect():
-        tid = int(r["term_id"])
-        if r["src"] == "meta":
-            meta[tid] = (int(r["a"]), int(r["b"]), int(r["c"]))
-        elif r["src"] == "overlap":
-            overlap[tid] = int(r["a"])
-        else:
-            dstats[tid] = (int(r["a"]), int(r["b"]), int(r["c"]))
-    live_df = {
-        tid: meta.get(tid, (0, 0, 0))[0]
-        - overlap.get(tid, 0)
-        + dstats.get(tid, (0, 0, 0))[0]
-        for tid in term_ids
-    }
-    idfs = {tid: idf_value(live_df[tid], n_docs) for tid in term_ids}
-
-    rank_map = dict(ranks)
-
-    def _score_delta(rows: DataFrame, tids: list[int]) -> DataFrame:
-        """Latest-wins delta rows -> (doc_id, rank, score) under live
-        stats, same numpy kernels as the base decode."""
-        live_avgdl, live_avgdl1, live_avgdlb = live_stats
-        score_cols = ["term_id", "doc_id", "tf", "dl"] + (
-            ["tf1", "dl1"] if fw is not None else []
+    per_term = (
+        superseded.unionByName(
+            delta_rows.select("term_id", F.lit(1).alias("n"), "tf", "dl")
         )
-        idf_map = {t: idfs[t] for t in tids}
-
-        def score_rows(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                idf = pdf["term_id"].map(idf_map).to_numpy(dtype=np.float64)
-                tf = pdf["tf"].to_numpy(dtype=np.float64)
-                dl = pdf["dl"].to_numpy(dtype=np.float64)
-                if fw is not None:
-                    w_t, w_b = fw
-                    t1 = pdf["tf1"].to_numpy(dtype=np.float64)
-                    d1 = pdf["dl1"].to_numpy(dtype=np.float64)
-                    score = bm25f_score(
-                        t1, tf - t1, d1, dl - d1, idf, w_t, w_b,
-                        live_avgdl1, live_avgdlb, K1, B,
-                    )
-                else:
-                    score = bm25_score(tf, dl, idf, live_avgdl, K1, B)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"].to_numpy(),
-                        "rank": pdf["term_id"].map(rank_map).to_numpy(
-                            dtype=np.int64
-                        ),
-                        "score": score,
-                    }
-                )
-
-        return (
-            rows.filter(F.col("term_id").isin(tids))
-            .select(*score_cols)
-            .mapInPandas(
-                score_rows, schema="doc_id long, rank long, score double"
-            )
+        .groupBy("term_id")
+        .agg(
+            F.sum("n").alias("n"),
+            F.max("tf").alias("max_tf"),
+            F.min("dl").alias("min_dl"),
         )
-
-    def _scored_union(
-        tids: list[int], theta: float, other_max: dict[int, float]
-    ) -> DataFrame:
-        base = _decode_score_df(
-            index,
-            probe.filter(F.col("term_id").isin(tids)),
-            idfs, theta, other_max, ranks,
-            field_weights=fw, stats=live_stats,
-        ).join(F.broadcast(snap["delta_doc_ids"]), "doc_id", "left_anti")
-        return base.unionByName(_score_delta(delta_rows, tids))
-
-    theta = 0.0
-    other_max: dict[int, float] = {}
-    if use_wand and len(term_ids) > 1 and mode == "OR":
-        # per-term upper bound under LIVE stats: raw extrema over base
-        # metadata ∪ delta rows, scored with live idf/avgdl
-        maxes = {}
-        for tid in term_ids:
-            mt, mds = 0, []
-            if tid in meta:
-                _, bmt, bmd = meta[tid]
-                mt = max(mt, bmt)
-                mds.append(bmd)
-            if tid in dstats:
-                _, dmt, dmd = dstats[tid]
-                mt = max(mt, dmt)
-                mds.append(dmd)
-            md = min(mds) if mds else 1
-            if mt <= 0:
-                maxes[tid] = 0.0
-            elif fw is not None:
-                maxes[tid] = _weighted_term_bound(float(mt), idfs[tid], fw)
-            else:
-                maxes[tid] = float(
-                    bm25_score(
-                        np.array([float(mt)]), np.array([float(md)]),
-                        idfs[tid], avgdl, K1, B,
-                    )[0]
-                )
-        other_max = {
-            tid: sum(v for t2, v in maxes.items() if t2 != tid)
-            for tid in term_ids
-        }
-        # theta: kth-best LIVE score among the rarest term's union rows —
-        # the safe lower bound on the kth top-k total (the filtered
-        # variant applies the same semi-join the final top-k does)
-        rarest = min(term_ids, key=lambda t: (live_df[t], t))
-        theta_rows = _scored_union([rarest], 0.0, {})
-        if doc_ids is not None:
-            theta_rows = theta_rows.join(
-                F.broadcast(doc_ids.select("doc_id")), "doc_id", "left_semi"
-            )
-        top = (
-            theta_rows.select("score")
-            .orderBy(F.desc("score"))
-            .limit(k)
-            .collect()
-        )
-        theta = float(top[-1]["score"]) if len(top) == k else 0.0
-
-    scored = _scored_union(term_ids, theta, other_max)
-    if doc_ids is not None:
-        scored = scored.join(
-            F.broadcast(doc_ids.select("doc_id")), "doc_id", "left_semi"
-        )
-    return _sum_topk(scored, len(term_ids), mode, k)
+    )
+    for r in per_term.collect():
+        b = bound[int(r["term_id"])]
+        b["df"] += int(r["n"])
+        if r["max_tf"] is not None:
+            mt, md = int(r["max_tf"]), int(r["min_dl"])
+            b["min_dl"] = md if b["max_tf"] <= 0 else min(b["min_dl"], md)
+            b["max_tf"] = max(b["max_tf"], mt)
+    return _Snapshot(
+        bound, union["n_docs"], avgdls, sketches=False,
+        delta_rows=delta_rows, superseded=union["delta_doc_ids"],
+    )
 
 
 def search_phrase(
@@ -964,36 +787,21 @@ def search_phrase(
     # deltas) — a phrase query derives all its stats (tf, df, dl, N,
     # avgdl) live from matched docs, so it answers the union corpus
     # EXACTLY, bit-equal to a fresh build (tests/test_streaming.py).
-    # Term queries choose per call: search() stays on the base snapshot
-    # (WAND-pruned; its sketches are base-stats-valid), while
-    # search_uncompacted() serves the same union snapshot as this path.
+    # Term queries choose per call: search() serves the base snapshot,
+    # search_uncompacted() the same union snapshot as this path.
+    from search_engine_spark.functions.compression import decode_position_list
     from search_engine_spark.streaming.incremental import uncompacted_snapshot
 
     snap = uncompacted_snapshot(spark, index.paths)
     tokens = [t for t in normalize_text(phrase).split(" ") if t]
     empty = spark.createDataFrame([], "doc_id long, score double")
-    if not tokens:
-        return empty
-    # ordered binding, duplicates preserved (phrase semantics); with
-    # deltas present the cached driver lexicon is stale for NEW terms —
-    # bind via the base ∪ delta lexicon scan instead
+    # ordered binding, duplicates preserved (phrase semantics), through
+    # the term binder of the snapshot being served
     uniq = sorted(set(tokens))
-    if snap is None and index._local_lexicon is not None:
-        tid_map = {
-            t: index._local_lexicon[t]["term_id"]
-            for t in uniq
-            if t in index._local_lexicon
-        }
-    else:
-        lex = index.lexicon if snap is None else snap["lexicon"]
-        tid_map = {
-            r["term"]: int(r["term_id"])
-            for r in lex.filter(F.col("term").isin(uniq))
-            .select("term", "term_id")
-            .collect()
-        }
-    if len(tid_map) < len(uniq):
+    bound = _bind(index, uniq, None if snap is None else snap["lexicon"])
+    if not tokens or len(bound) < len(uniq):
         return empty  # a phrase term is out of lexicon -> no match
+    tid_map = {b["term"]: tid for tid, b in bound.items()}
     tids = [tid_map[t] for t in tokens]
     pos = spark.read.parquet(index.paths.positions)
     barrels = sorted({tid % index.n_barrels for tid in tids})
@@ -1002,43 +810,33 @@ def search_phrase(
     )
     pos = pruned(pos)
     if snap is not None:
-        if "pos_blob" not in pos.columns:
-            raise ValueError(
-                "positional index uses the pre-v2 array layout; rebuild "
-                "with build_index(..., with_positions=True) before "
-                "serving phrase queries over ingest deltas"
-            )
         # latest version wins: base rows of re-ingested/tombstoned docs
         # are ignored (broadcast anti-join on the small batch doc set),
         # the pruned positional delta rows take their place
         pos = pos.join(
             F.broadcast(snap["delta_doc_ids"]), "doc_id", "left_anti"
         ).unionByName(pruned(snap["pos_delta"]).select(*pos.columns))
-    if "pos_blob" in pos.columns:
-        # compressed positional layout: one Arrow decode pass over ONLY
-        # the pruned (barrel, term) rows, then the JVM adjacency joins
-        from search_engine_spark.functions.compression import (
-            decode_position_list,
-        )
 
-        def _decode_pos(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                yield pd.DataFrame(
-                    {
-                        "term_id": pdf["term_id"].to_numpy(),
-                        "doc_id": pdf["doc_id"].to_numpy(),
-                        "positions": [
-                            decode_position_list(b) for b in pdf["pos_blob"]
-                        ],
-                    }
-                )
+    # one Arrow decode pass over ONLY the pruned (barrel, term) rows, then
+    # the JVM adjacency joins
+    def _decode_pos(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "term_id": pdf["term_id"].to_numpy(),
+                    "doc_id": pdf["doc_id"].to_numpy(),
+                    "positions": [
+                        decode_position_list(b) for b in pdf["pos_blob"]
+                    ],
+                }
+            )
 
-        # prune below the Arrow boundary: mapInPandas ships EVERY input
-        # column to Python — n_pos and barrel are not consumed by the
-        # decode (CLAUDE.md column-prune rule)
-        pos = pos.select("term_id", "doc_id", "pos_blob").mapInPandas(
-            _decode_pos, schema="term_id long, doc_id long, positions array<long>"
-        )
+    # prune below the Arrow boundary: mapInPandas ships EVERY input
+    # column to Python — n_pos and barrel are not consumed by the
+    # decode (CLAUDE.md column-prune rule)
+    pos = pos.select("term_id", "doc_id", "pos_blob").mapInPandas(
+        _decode_pos, schema="term_id long, doc_id long, positions array<long>"
+    )
     cur = (
         pos.filter(F.col("term_id") == tids[0])
         .select("doc_id", F.col("positions").alias("match"))
@@ -1314,16 +1112,11 @@ def index_stats(index: SearchIndex) -> DataFrame:
     numbers per build STEP live in the manifest (per-partition lineage);
     this is the live-table view."""
     index.check_epoch()
-    # legacy (pre-field-channel) barrels lack tf1s/dls1 — include only
-    # the columns this index actually has (decode_postings_rows applies
-    # the same gate)
-    blob_cols = [
-        c
-        for c in ("doc_deltas", "tfs", "dls", "tf1s", "dls1")
-        if c in index.postings.columns
-    ]
     blob_bytes = sum(
-        [F.coalesce(F.octet_length(c), F.lit(0)) for c in blob_cols],
+        [
+            F.octet_length(c)
+            for c in ("doc_deltas", "tfs", "dls", "tf1s", "dls1")
+        ],
         F.lit(0),
     )
     p = index.postings.select(
@@ -1435,7 +1228,9 @@ def search_many(
         for tid in union_terms
     }
     probe = _probe(index, union_terms)
-    partials = _decode_score_df(index, probe, idfs, 0.0, {}, ranks=dense)
+    partials = _decode_score_df(
+        probe, idfs, 0.0, {}, dense, None, index.avgdls
+    )
     # term-index -> (query, per-query rank) fan-out; per-query rank is
     # the term's position in THAT query's sorted-term-string order (the
     # float-sum order search() uses)

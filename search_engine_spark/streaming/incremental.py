@@ -34,11 +34,12 @@ delta log + partition-level compaction, the shape that works at
   queries stay exact between compactions for all untouched terms, and
   WAND bounds recompute from the live (N, avgdl, df) at query time
   (functions/compression.py design note). Between ingest and compaction
-  TERM queries serve EXACTLY the base snapshot (base postings scored
-  with base stats — the compressed barrels and WAND metadata for delta
-  docs exist only post-compaction), while PHRASE queries serve the
-  union snapshot via uncompacted_snapshot() (they derive every stat
-  live from matched docs, so the union answer is exact). Ingest touches
+  query.search serves EXACTLY the base snapshot (base postings scored
+  with base stats — the compressed barrels and WAND sketches for delta
+  docs exist only post-compaction), while query.search_uncompacted and
+  query.search_phrase serve the union snapshot via
+  uncompacted_snapshot() (latest-wins delta rows scored with live
+  stats, so the union answer is exact). Ingest touches
   only delta directories; compact() stages every table first, then
   journals the whole swap as idempotent ops and commits it with ONE
   atomic file rename (recover_pending rolls an interrupted swap forward
@@ -357,39 +358,22 @@ def read_lexicon(
     return lex
 
 
-def read_doc_stats(spark: SparkSession, paths: ib.IndexPaths) -> DataFrame:
-    ds = spark.read.parquet(paths.doc_stats)
-    for d in _committed_subdirs(paths, doc_stats_delta_dir(paths)):
-        ds = ds.unionByName(spark.read.parquet(d))
-    return ds
-
-
 def union_corpus_stats(
-    spark: SparkSession,
-    paths: ib.IndexPaths,
-    base_ds: DataFrame,
-    latest_ds: DataFrame,
+    paths: ib.IndexPaths, base_ds: DataFrame, latest_ds: DataFrame
 ) -> tuple[int, int, int]:
     """(n_docs, total_dl, total_dl1) of base ∪ un-compacted deltas as
-    EXACT ints — stats_base scalars plus one small aggregate over the
-    (tiny) latest delta rows, not a full doc_stats rescan. Re-ingests
-    count once: the latest delta version REPLACES the base row's dl.
-    Exact integer arithmetic keeps the derived avgdl/avgdl1/avgdlb
-    bit-equal to a fresh build's. Legacy rows without dl1 count 0."""
-    row = spark.read.parquet(paths.stats_base).collect()[0]
-    rd = row.asDict()
+    EXACT ints — stats_base scalars (read driver-side, no Spark job) plus
+    one small aggregate over the (tiny) latest delta rows, not a full
+    doc_stats rescan. Re-ingests count once: the latest delta version
+    REPLACES the base row's dl. Exact integer arithmetic keeps the derived
+    avgdl/avgdl1/avgdlb bit-equal to a fresh build's."""
+    rd = ib.read_scalar_parquet(paths.stats_base)
     n_docs, total_dl = int(rd["n_docs"]), int(rd["total_dl"])
-    total_dl1 = int(rd.get("total_dl1") or 0)
-    base_dl1 = (
-        F.col("dl1") if "dl1" in base_ds.columns else F.lit(0).cast("long")
-    )
-    new_dl1 = (
-        F.col("dl1") if "dl1" in latest_ds.columns else F.lit(0).cast("long")
-    )
-    agg = latest_ds.withColumn("_new_dl1", new_dl1).join(
+    total_dl1 = int(rd["total_dl1"])
+    agg = latest_ds.join(
         base_ds.select(
             "doc_id", F.col("dl").alias("_base_dl"),
-            base_dl1.alias("_base_dl1"),
+            F.col("dl1").alias("_base_dl1"),
         ),
         "doc_id",
         "left",
@@ -397,7 +381,7 @@ def union_corpus_stats(
         F.sum(F.when(F.col("_base_dl").isNull(), 1).otherwise(0)).alias("n_new"),
         F.sum("dl").alias("dl_new"),
         F.sum(F.coalesce("_base_dl", F.lit(0))).alias("dl_replaced"),
-        F.sum("_new_dl1").alias("dl1_new"),
+        F.sum("dl1").alias("dl1_new"),
         F.sum(
             F.when(F.col("_base_dl").isNull(), 0)
             .otherwise(F.coalesce("_base_dl1", F.lit(0)))
@@ -416,7 +400,7 @@ def check_postings_log(paths: ib.IndexPaths) -> None:
     corpus over a torn log would silently miss or half-apply those docs;
     compact()/re-ingest repairs. Owned here, next to the positional
     guard, so every delta-log consumer shares one invariant check
-    (query.search_uncompacted calls this)."""
+    (query.search_uncompacted's union snapshot calls this)."""
     ds_b = {
         os.path.basename(d)
         for d in _committed_subdirs(paths, doc_stats_delta_dir(paths))
@@ -437,18 +421,21 @@ def check_postings_log(paths: ib.IndexPaths) -> None:
 def uncompacted_snapshot(spark: SparkSession, paths: ib.IndexPaths) -> dict | None:
     """Serving view of the UNION corpus (base ∪ un-compacted deltas) for
     phrase queries (query.search_phrase) and fresh term queries
-    (query.search_uncompacted): both derive everything they score with
+    (query.search_uncompacted, which folds it into the union snapshot of
+    the one term-query pipeline): both derive everything they score with
     (tf, df, dl, N, avgdl — positions for the phrase path) live from the
     base ∪ delta rows, so they serve the union snapshot EXACTLY
     (bit-equal to a fresh build; tests/test_streaming.py). Plain
-    query.search keeps serving the base snapshot — its WAND sketches and
-    lexicon bounds were computed under base stats and stay valid there.
+    query.search serves the base snapshot of the same pipeline — its WAND
+    sketches and lexicon bounds were computed under base stats and stay
+    valid there.
 
     Returns None when no deltas exist (serve the base tables), else a
     dict with:
       lexicon     base ∪ delta extensions (new terms bind)
       doc_stats   latest-wins fold (base rows replaced by re-ingests)
-      n_docs, avgdl  union-corpus scalars, exact-int derived
+      n_docs, avgdl, avgdl1, avgdlb  union-corpus scalars, exact-int
+                     derived
       delta_doc_ids  docs whose BASE positions rows must be ignored
                      (re-ingested or tombstoned — latest version wins)
       pos_delta   latest-wins positional delta rows (all barrels;
@@ -485,12 +472,7 @@ def uncompacted_snapshot(spark: SparkSession, paths: ib.IndexPaths) -> dict | No
         .unionByName(latest_ds.select(*base_ds.columns))
         .dropDuplicates(["doc_id"])
     )
-    if os.path.exists(paths.stats_base):
-        n_docs, total_dl, total_dl1 = union_corpus_stats(
-            spark, paths, base_ds, latest_ds
-        )
-    else:  # legacy index without stats_base scalars
-        n_docs, total_dl, total_dl1 = ib.corpus_totals(folded_ds)
+    n_docs, total_dl, total_dl1 = union_corpus_stats(paths, base_ds, latest_ds)
     avgdl1, avgdlb = ib.field_avgdls(n_docs, total_dl, total_dl1)
     pos_delta = None
     if pos_dirs:
@@ -627,22 +609,12 @@ def apply_incremental_batch(
     batch_keys = batch_ds.select(
         "doc_id", F.col("fp").alias("_new_fp")
     )
-    if "fp" in base_ds.columns:
-        # null-safe inequality: a base row whose fp is NULL (possible
-        # after a fast-path fold moved fp-bearing delta files into a
-        # legacy pre-fp doc_stats dir) must be treated as CHANGED — a
-        # plain != is null there and the filter would silently drop the
-        # row, leaving the old version's postings stale forever
-        changed = (
-            base_ds.select("doc_id", "fp")
-            .join(F.broadcast(batch_keys), "doc_id")
-            .filter(~F.col("fp").eqNullSafe(F.col("_new_fp")))
-            .select("doc_id")
-        )
-    else:  # legacy index without fp: treat every re-ingest as changed
-        changed = base_ds.select("doc_id").join(
-            F.broadcast(batch_keys.select("doc_id")), "doc_id", "left_semi"
-        )
+    changed = (
+        base_ds.select("doc_id", "fp")
+        .join(F.broadcast(batch_keys), "doc_id")
+        .filter(F.col("fp") != F.col("_new_fp"))
+        .select("doc_id")
+    )
     n_changed = changed.count()
     if n_changed:
         changed.write.mode("overwrite").parquet(tomb_batch_dir)
@@ -727,19 +699,15 @@ def apply_incremental_batch(
     # queries score base-only postings with union-corpus stats, which is
     # neither the old nor the new snapshot. compact() performs the swap.)
     # Re-ingests count once: latest delta version replaces the base row.
-    if os.path.exists(paths.stats_base):
-        all_ds = _read_deltas_with_seq(spark, paths, doc_stats_delta_dir(paths))
-        if all_ds is not None:
-            latest = _latest_per_doc(all_ds)
-            n_docs, total_dl, _ = union_corpus_stats(
-                spark, paths, base_ds, latest
-            )
-        else:
-            row = spark.read.parquet(paths.stats_base).collect()[0]
-            n_docs, total_dl = int(row["n_docs"]), int(row["total_dl"])
-        avgdl = float(total_dl) / n_docs if n_docs else 0.0
-    else:  # legacy index without stats_base
-        n_docs, avgdl = ib.corpus_stats(read_doc_stats(spark, paths))
+    all_ds = _read_deltas_with_seq(spark, paths, doc_stats_delta_dir(paths))
+    if all_ds is not None:
+        n_docs, total_dl, _ = union_corpus_stats(
+            paths, base_ds, _latest_per_doc(all_ds)
+        )
+    else:
+        rd = ib.read_scalar_parquet(paths.stats_base)
+        n_docs, total_dl = int(rd["n_docs"]), int(rd["total_dl"])
+    avgdl = float(total_dl) / n_docs if n_docs else 0.0
 
     docs.unpersist()
     forward.unpersist()
@@ -1001,8 +969,7 @@ def compact(spark: SparkSession, paths: ib.IndexPaths) -> dict:
         )
 
     # allowMissingColumns: untouched blobs from a pre-upgrade index may
-    # lack newer metadata columns (e.g. theta_tf1s) — they ride along as
-    # nulls; readers coalesce (build_hot_bounds) or prune (decode) them
+    # lack newer metadata columns — they ride along as nulls
     merged = base_untouched.unionByName(re_encoded, allowMissingColumns=True)
 
     # 6. refreshed lexicon: base ∪ uncompacted batch extensions, with
@@ -1108,12 +1075,6 @@ def compact(spark: SparkSession, paths: ib.IndexPaths) -> dict:
     pos_staging = None
     pos_barrels: list[int] = []
     if os.path.exists(paths.positions) and _committed_subdirs(paths, pdd):
-        if "pos_blob" not in spark.read.parquet(paths.positions).columns:
-            raise ValueError(
-                "positional index uses the pre-v2 array layout; rebuild "
-                "with build_index(..., with_positions=True) before "
-                "compacting positional deltas"
-            )
         pos_deltas_seq = _read_deltas_with_seq(spark, paths, pdd)
         pos_cols = [
             c for c in pos_deltas_seq.columns if c != "batch_seq"

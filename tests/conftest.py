@@ -67,3 +67,35 @@ def spark_index(spark, corpus, tmp_path_factory):
         id_partitions=8,
     )
     return SearchIndex(spark, paths)
+
+
+@pytest.fixture(scope="session")
+def count_collects(spark):
+    """Context-manager factory counting DataFrame.collect() calls made in
+    its block (take() and toPandas() collect too). Patches the CONCRETE
+    DataFrame class this session returns: PySpark 4's classic DataFrame
+    overrides collect, so patching pyspark.sql.DataFrame counts nothing.
+    The probe checks itself once so it can never silently read 0."""
+    import contextlib
+
+    cls = type(spark.range(1))
+
+    @contextlib.contextmanager
+    def probe():
+        calls: list[int] = []
+        orig = cls.collect
+
+        def counting(self, *a, **kw):
+            calls.append(1)
+            return orig(self, *a, **kw)
+
+        cls.collect = counting
+        try:
+            yield calls
+        finally:
+            cls.collect = orig
+
+    with probe() as calls:
+        spark.range(1).collect()
+    assert len(calls) == 1, "collect probe does not intercept collect()"
+    return probe
