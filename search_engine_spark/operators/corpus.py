@@ -4098,6 +4098,13 @@ def _sql_terms(q: str) -> str:
     return ", ".join(f"'{t}'" for t in q.split(" "))
 
 
+def _sql_str(s: str) -> str:
+    """A DuckDB string literal (quotes doubled). Prefix oracles match
+    with starts_with(term, <literal>) like Spark's startswith: a LIKE
+    pattern would treat '_' and '%' in the prefix as wildcards."""
+    return "'" + s.replace("'", "''") + "'"
+
+
 _MINHASH_SIG_CTE = f"""
 sh AS (
   SELECT DISTINCT doc_id,
@@ -5459,7 +5466,7 @@ ORACLE_SQL["bm25_prefix_topk"] = f"""
 WITH {_TOK_CTE},
 tf AS (
   SELECT doc_id, term, COUNT(*) AS tf FROM tok
-  WHERE term LIKE '{_QUERY_PREFIX}%'
+  WHERE starts_with(term, {_sql_str(_QUERY_PREFIX)})
   GROUP BY doc_id, term
 ),
 dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
@@ -5661,7 +5668,7 @@ ORACLE_SQL["suggest_terms"] = f"""
 WITH {_TOK_CTE}
 SELECT term, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df,
        CAST(COUNT(*) AS BIGINT) AS cf
-FROM tok WHERE term LIKE '{_SUGGEST_PREFIX}%'
+FROM tok WHERE starts_with(term, {_sql_str(_SUGGEST_PREFIX)})
 GROUP BY term
 ORDER BY df DESC, cf DESC, term ASC LIMIT {_SUGGEST_K}
 """

@@ -996,7 +996,23 @@ def read_stats(spark: SparkSession, out: IndexPaths) -> dict:
     return {k: r[k] for k in r.asDict()}
 
 
-_PA_TYPES = {"long": "int64", "double": "float64", "int": "int32"}
+_PA_TYPES = {
+    "long": "int64", "double": "float64", "int": "int32", "string": "string",
+}
+
+
+def arrow_schema(ddl: str):
+    """The pyarrow schema of a flat Spark DDL string ("a long, b double")
+    — so driver-built Arrow tables carry the exact column types the
+    equivalent Spark schema has."""
+    import pyarrow as pa
+
+    return pa.schema(
+        [
+            pa.field(name, getattr(pa, _PA_TYPES[typ])())
+            for name, typ in (c.strip().split(" ") for c in ddl.split(","))
+        ]
+    )
 
 
 def read_scalar_parquet(path: str) -> dict:
@@ -1021,13 +1037,9 @@ def write_scalar_parquet(path: str, schema: str, row: tuple) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    fields = []
-    for col in schema.split(","):
-        name, typ = col.strip().split(" ")
-        fields.append(pa.field(name, getattr(pa, _PA_TYPES[typ])()))
+    sch = arrow_schema(schema)
     table = pa.Table.from_arrays(
-        [pa.array([v], type=f.type) for v, f in zip(row, fields)],
-        schema=pa.schema(fields),
+        [pa.array([v], type=f.type) for v, f in zip(row, sch)], schema=sch
     )
     import os
 

@@ -25,6 +25,27 @@ stats, sketches valid: zero Spark jobs to plan a hot-rarest query);
 search_uncompacted() serves the UNION snapshot (base ∪ deltas, live
 stats). search_phrase binds through the same binder (_bind).
 
+Two serving paths run that pipeline, chosen per query from what the
+driver already holds (no Spark job decides):
+
+  * DRIVER-LOCAL — the snapshot has no delta rows, there is no doc_ids
+    filter, and the bound terms' lexicon df sums to at most
+    _LOCAL_MAX_POSTINGS. Steps 3-6 run in the driver: the same pruned
+    (barrel, term_id) rows read through a pyarrow dataset (_read_probe),
+    the same decode kernel (_decode_score), theta rule and per-doc sum
+    order in numpy (_local_topk), returned as an Arrow-backed
+    LocalRelation — the query launches no Spark job. The reference
+    serves this way too: a resident lexicon plus barrel reads
+    (backend/utils/barrel_manager.py).
+  * DISTRIBUTED — everything else (pending deltas, doc_ids filters,
+    probes above the gate): step 3 is a Spark scan, step 4 a
+    mapInPandas of the same _decode_score, steps 5-6 _sum_topk.
+
+The gate sits below the measured break-even (PLANS.md, Query engine):
+locally ~40 ms of fixed cost plus 0.5-1.8 us per posting, against
+0.6-1.2 s of Spark scheduling before the distributed plan decodes its
+first posting. search_many and search_phrase stay distributed.
+
 Float discipline: per-posting scores are computed in numpy float64 via the
 single canonical expression (compression.bm25_score == oracle.bm25_contrib
 shape), idf via math.log on both sides, and the per-doc sum is evaluated in
@@ -47,10 +68,12 @@ in tests/test_wand.py.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from decimal import ROUND_HALF_UP, Decimal
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -61,12 +84,28 @@ from search_engine_spark.functions.compression import (
 )
 from search_engine_spark.operators.index_build import (
     B,
+    DECODE_BASE_COLS,
+    DECODE_BOUND_COLS,
+    DECODE_FIELD_BOUND_COLS,
+    DECODE_TF1_COLS,
     K1,
     IndexPaths,
+    arrow_schema,
     idf_value,
     read_stats,
 )
 from search_engine_spark.functions.text import normalize_text
+
+# Driver-local serving gate: a base-snapshot query without a doc_ids
+# filter whose bound terms' df sums to at most this many postings is
+# read with pyarrow and scored in the driver (no Spark job). Below the
+# local-vs-distributed break-even, which lies above the largest probe
+# measured (1.1M postings; PLANS.md, Query engine); the gate also bounds
+# the driver's per-query work (400k postings: 33 MB peak of Python/numpy
+# allocations, 0.2-0.7 s of one core).
+_LOCAL_MAX_POSTINGS = 500_000
+_RESULT_DDL = "doc_id long, score double"
+_QUANTUM6 = Decimal("0.000001")
 
 
 class SearchIndex:
@@ -106,6 +145,15 @@ class SearchIndex:
         from search_engine_spark.operators.index_build import read_postings
 
         self.postings = read_postings(spark, paths.postings)
+        # the same barrels for driver-local serving (_read_probe), hive-
+        # partitioned so both the barrel=B and resumable_build's
+        # group=G/barrel=B layouts expose a barrel column; opened here so
+        # refresh() re-lists the files a compaction rewrote
+        import pyarrow.dataset as pads
+
+        self.postings_ds = pads.dataset(
+            paths.postings, format="parquet", partitioning="hive"
+        )
         self.doc_stats = spark.read.parquet(paths.doc_stats)
         # hot-term theta sketches (tiny: one row per SALTED term) — the
         # driver-side WAND threshold source for Zipf-head queries
@@ -224,6 +272,39 @@ def _probe(index: SearchIndex, term_ids: list[int]) -> DataFrame:
     )
 
 
+def _decode_cols(field_weights: tuple[float, float] | None) -> list[str]:
+    """The postings columns a blob decode consumes: the field channel and
+    its block bounds only in BM25F mode."""
+    cols = DECODE_BASE_COLS + DECODE_BOUND_COLS
+    if field_weights is not None:
+        cols = cols + DECODE_FIELD_BOUND_COLS + DECODE_TF1_COLS
+    return cols
+
+
+def _read_probe(
+    index: SearchIndex,
+    term_ids: list[int],
+    field_weights: tuple[float, float] | None,
+) -> pd.DataFrame:
+    """Driver-side twin of _probe(): the same ``barrel IN … AND term_id IN
+    …`` rows and decode columns, read through the pyarrow dataset, with a
+    null codec coalesced to 0 (varint) as read_postings does."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+
+    ds = index.postings_ds
+    barrels = sorted({tid % index.n_barrels for tid in term_ids})
+    where = pads.field("barrel").isin(
+        pa.array(barrels, ds.schema.field("barrel").type)
+    ) & pads.field("term_id").isin(pa.array(term_ids, pa.int64()))
+    table = ds.to_table(columns=_decode_cols(field_weights), filter=where)
+    i = table.schema.get_field_index("codec")
+    table = table.set_column(
+        i, "codec", pc.fill_null(table["codec"], 0).cast(pa.int32())
+    )
+    return table.to_pandas()
+
+
 def _norms(avgdls: tuple[float, float, float]) -> tuple[float, float, float]:
     """(avgdl, avgdl1, avgdlb) with zero per-field averages guarded to 1.0
     (field absent corpus-wide ⇒ its tf is identically 0; the guard
@@ -232,23 +313,27 @@ def _norms(avgdls: tuple[float, float, float]) -> tuple[float, float, float]:
     return avgdl, avgdl1 or 1.0, avgdlb or 1.0
 
 
-def _decode_score_df(
-    probe: DataFrame,
+def _decode_score(
+    pdf: pd.DataFrame,
     idfs: dict[int, float],
     theta: float,
     other_max: dict[int, float],
     ranks: dict[int, int],
     field_weights: tuple[float, float] | None,
     avgdls: tuple[float, float, float],
-) -> DataFrame:
-    """mapInPandas: blob rows -> (doc_id, rank, score) with block-max
-    skipping. other_max[t] = sum of max_score over the OTHER query terms.
-    ``avgdls`` = (avgdl, avgdl1, avgdlb) of the snapshot being served.
-    ``ranks`` maps term_id -> the term's position in SORTED-BY-STRING
-    query-term order — a build-independent key for the deterministic
-    per-doc float sum (term_ids are NOT stable across incremental builds:
-    new terms append at max_id+1, so summing in term_id order would
-    diverge from a fresh build in the last ulp for 3+-term queries).
+) -> pd.DataFrame:
+    """Blob rows -> (doc_id, rank, score) per-posting partial scores with
+    block-max skipping: the one decode kernel of both serving paths (the
+    mapInPandas of _decode_score_df and the driver-local branch of
+    _search), so their floats and skipped blocks are the same by
+    construction. other_max[t] = sum of max_score over the OTHER query
+    terms. ``avgdls`` = (avgdl, avgdl1, avgdlb) of the snapshot being
+    served. ``ranks`` maps term_id -> the term's position in
+    SORTED-BY-STRING query-term order — a build-independent key for the
+    deterministic per-doc float sum (term_ids are NOT stable across
+    incremental builds: new terms append at max_id+1, so summing in
+    term_id order would diverge from a fresh build in the last ulp for
+    3+-term queries).
 
     ``field_weights`` = (w_title, w_body) switches to TRUE BM25F
     (compression.bm25f_score): each field's tf is normalized by its own
@@ -261,91 +346,101 @@ def _decode_score_df(
     block (body tf ≤ tf, so block_max_tf bounds it)."""
     avgdl, avgdl1, avgdlb = _norms(avgdls)
     fw = field_weights
+    out_doc, out_rank, out_score = [], [], []
+    for row in pdf.itertuples(index=False):
+        tid = int(row.term_id)
+        cid = int(row.codec)
+        idf = idfs[tid]
+        # per-block upper bound from the monotone summaries, with
+        # LIVE idf/avgdl — exact even after incremental updates
+        # (compression.block_summaries)
+        mt = np.asarray(row.block_max_tf, dtype=np.float64)
+        md = np.asarray(row.block_min_dl, dtype=np.float64)
+        if fw is not None:
+            w_t, w_b = fw
+            mt1 = np.asarray(row.block_max_tf1, dtype=np.float64)
+            md1 = np.asarray(row.block_min_dl1, dtype=np.float64)
+            mdb = np.asarray(row.block_min_dlb, dtype=np.float64)
+            bm = bm25f_score(
+                mt1, mt, md1, mdb, idf, w_t, w_b, avgdl1, avgdlb, K1, B,
+            )
+        else:
+            bm = bm25_score(mt, md, idf, avgdl, K1, B)
+        if theta > 0.0:
+            # prune against theta RELAXED by the 6-dp rounding quantum:
+            # the final top-k orders by round(score, 6), so a doc whose
+            # raw total sits within 5e-7 below theta can round-TIE the
+            # kth score and win the doc_id tiebreak — pruning it would
+            # diverge from the oracle exactly at the tie boundaries the
+            # rounded ordering was introduced to stabilize
+            keep = bm + other_max.get(tid, 0.0) >= theta - 5e-7
+            if not keep.any():
+                continue
+        else:
+            keep = None  # decode all blocks
+        # pruned blocks are never DECOMPRESSED — the per-block byte-length
+        # tables make skipping pure offset arithmetic
+        if fw is not None:
+            d, t, l, t1, d1 = decode_posting_blocks(
+                row.doc_deltas, row.tfs, row.dls,
+                row.db_lens, row.tf_lens, row.dl_lens, keep,
+                row.tf1s, row.tf1_lens, row.dls1, row.dl1_lens,
+                codec=cid,
+            )
+            score = bm25f_score(
+                t1, t - t1, d1, l - d1, idf, w_t, w_b, avgdl1, avgdlb, K1, B,
+            )
+        else:
+            d, t, l = decode_posting_blocks(
+                row.doc_deltas, row.tfs, row.dls,
+                row.db_lens, row.tf_lens, row.dl_lens, keep,
+                codec=cid,
+            )
+            score = bm25_score(t, l, idf, avgdl, K1, B)
+        out_doc.append(d)
+        out_rank.append(np.full(len(d), ranks[tid], dtype=np.int64))
+        out_score.append(score)
+    if not out_doc:
+        return pd.DataFrame(
+            {
+                "doc_id": np.empty(0, np.int64),
+                "rank": np.empty(0, np.int64),
+                "score": np.empty(0, np.float64),
+            }
+        )
+    return pd.DataFrame(
+        {
+            "doc_id": np.concatenate(out_doc),
+            "rank": np.concatenate(out_rank),
+            "score": np.concatenate(out_score),
+        }
+    )
+
+
+def _decode_score_df(
+    probe: DataFrame,
+    idfs: dict[int, float],
+    theta: float,
+    other_max: dict[int, float],
+    ranks: dict[int, int],
+    field_weights: tuple[float, float] | None,
+    avgdls: tuple[float, float, float],
+) -> DataFrame:
+    """mapInPandas of _decode_score over a postings probe ->
+    (doc_id, rank, score)."""
     # column pruning BELOW the Arrow boundary: mapInPandas ships every
     # column of its input to Python, so an unpruned probe would transfer
     # the theta sketch arrays and (in unweighted mode) the field streams
     # for nothing — and the select also prunes the parquet scan itself
-    from search_engine_spark.operators.index_build import (
-        DECODE_BASE_COLS,
-        DECODE_BOUND_COLS,
-        DECODE_FIELD_BOUND_COLS,
-        DECODE_TF1_COLS,
-    )
-
-    cols = DECODE_BASE_COLS + DECODE_BOUND_COLS
-    if fw is not None:
-        cols = cols + DECODE_FIELD_BOUND_COLS + DECODE_TF1_COLS
-    probe = probe.select(*cols)
+    probe = probe.select(*_decode_cols(field_weights))
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out_doc, out_rank, out_score = [], [], []
-            for row in pdf.itertuples(index=False):
-                tid = int(row.term_id)
-                cid = int(row.codec)
-                idf = idfs[tid]
-                # per-block upper bound from the monotone summaries, with
-                # LIVE idf/avgdl — exact even after incremental updates
-                # (compression.block_summaries)
-                mt = np.asarray(row.block_max_tf, dtype=np.float64)
-                md = np.asarray(row.block_min_dl, dtype=np.float64)
-                if fw is not None:
-                    w_t, w_b = fw
-                    mt1 = np.asarray(row.block_max_tf1, dtype=np.float64)
-                    md1 = np.asarray(row.block_min_dl1, dtype=np.float64)
-                    mdb = np.asarray(row.block_min_dlb, dtype=np.float64)
-                    bm = bm25f_score(
-                        mt1, mt, md1, mdb, idf, w_t, w_b, avgdl1, avgdlb,
-                        K1, B,
-                    )
-                else:
-                    bm = bm25_score(mt, md, idf, avgdl, K1, B)
-                if theta > 0.0:
-                    # prune against theta RELAXED by the 6-dp rounding
-                    # quantum: the final top-k orders by round(score, 6),
-                    # so a doc whose raw total sits within 5e-7 below
-                    # theta can round-TIE the kth score and win the
-                    # doc_id tiebreak — pruning it would diverge from the
-                    # oracle exactly at the tie boundaries the rounded
-                    # ordering was introduced to stabilize
-                    keep = bm + other_max.get(tid, 0.0) >= theta - 5e-7
-                    if not keep.any():
-                        continue
-                else:
-                    keep = None  # decode all blocks
-                # pruned blocks are never DECOMPRESSED — the per-block
-                # byte-length tables make skipping pure offset arithmetic
-                if fw is not None:
-                    d, t, l, t1, d1 = decode_posting_blocks(
-                        row.doc_deltas, row.tfs, row.dls,
-                        row.db_lens, row.tf_lens, row.dl_lens, keep,
-                        row.tf1s, row.tf1_lens, row.dls1, row.dl1_lens,
-                        codec=cid,
-                    )
-                    score = bm25f_score(
-                        t1, t - t1, d1, l - d1, idf, w_t, w_b,
-                        avgdl1, avgdlb, K1, B,
-                    )
-                else:
-                    d, t, l = decode_posting_blocks(
-                        row.doc_deltas, row.tfs, row.dls,
-                        row.db_lens, row.tf_lens, row.dl_lens, keep,
-                        codec=cid,
-                    )
-                    score = bm25_score(t, l, idf, avgdl, K1, B)
-                out_doc.append(d)
-                out_rank.append(
-                    np.full(len(d), ranks[tid], dtype=np.int64)
-                )
-                out_score.append(score)
-            if out_doc:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": np.concatenate(out_doc),
-                        "rank": np.concatenate(out_rank),
-                        "score": np.concatenate(out_score),
-                    }
-                )
+            out = _decode_score(
+                pdf, idfs, theta, other_max, ranks, field_weights, avgdls
+            )
+            if len(out):
+                yield out
 
     return probe.mapInPandas(decode, schema="doc_id long, rank long, score double")
 
@@ -491,19 +586,26 @@ def _search(
     """The BM25 term-query pipeline over one snapshot: idf from the
     snapshot df → per-term bounds → theta → decode (base blobs minus
     superseded docs, plus delta rows) → optional doc_ids semi-join →
-    _sum_topk.
+    top-k.
+
+    Serving path: a snapshot without delta rows, no doc_ids filter and
+    at most _LOCAL_MAX_POSTINGS postings over the bound terms (lexicon
+    df) runs DRIVER-LOCAL — _read_probe's pyarrow read, the same
+    _decode_score kernel, theta and per-doc sum order in numpy
+    (_local_topk), returned as an Arrow-backed LocalRelation: no Spark
+    job. Everything else plans the distributed pipeline (mapInPandas
+    decode, _sum_topk).
 
     Theta (multi-term OR with WAND only): the driver sketch when the
     sketches describe the snapshot and there is no doc_ids filter (the
     sketch ignores the filter, so its kth achieved score may exceed the
-    kth FILTERED score and over-prune), plus the distributed rarest-term
-    pass over the snapshot's scored rows — filter applied — whenever the
-    rarest term has no usable sketch. A cold rarest term's list is
-    bounded by salt_threshold, so that pass is cheap and usually
-    tighter."""
+    kth FILTERED score and over-prune), plus the rarest-term pass over
+    the snapshot's scored rows — filter applied — whenever the rarest
+    term has no usable sketch. A cold rarest term's list is bounded by
+    salt_threshold, so that pass is cheap and usually tighter."""
     bound = snap.bound
     if not bound:
-        return index.spark.createDataFrame([], "doc_id long, score double")
+        return _arrow_df(index.spark, _RESULT_DDL)
     term_ids = sorted(bound)
     idfs = {tid: idf_value(b["df"], snap.n_docs) for tid, b in bound.items()}
     # per-doc sum in SORTED-TERM-STRING order: matches the oracle (its ids
@@ -514,34 +616,66 @@ def _search(
             sorted(term_ids, key=lambda t: bound[t]["term"])
         )
     }
-    probe = _probe(index, term_ids)
+    local = (
+        snap.delta_rows is None
+        and doc_ids is None
+        and sum(b["df"] for b in bound.values()) <= _LOCAL_MAX_POSTINGS
+    )
+    if local:
+        blobs = _read_probe(index, term_ids, field_weights)
 
-    def scored(
-        tids: list[int], theta: float, other_max: dict[int, float]
-    ) -> DataFrame:
-        p = probe if tids == term_ids else probe.filter(
-            F.col("term_id").isin(tids)
-        )
-        rows = _decode_score_df(
-            p, idfs, theta, other_max, ranks, field_weights, snap.avgdls
-        )
-        if snap.delta_rows is not None:
-            # latest version wins: base rows of re-ingested or tombstoned
-            # docs drop out (broadcast anti-join on the small delta doc
-            # set), their delta rows take their place
-            delta = snap.delta_rows.filter(F.col("term_id").isin(tids))
-            rows = rows.join(
-                F.broadcast(snap.superseded), "doc_id", "left_anti"
-            ).unionByName(
-                _score_rows(delta, idfs, ranks, field_weights, snap.avgdls)
+        def scored(tids, theta, other_max):
+            pdf = blobs if tids == term_ids else blobs[
+                blobs["term_id"].isin(tids)
+            ]
+            return _decode_score(
+                pdf, idfs, theta, other_max, ranks, field_weights, snap.avgdls
             )
-        if doc_ids is not None:
-            # metadata filter below the aggregation: pruned docs never
-            # enter the per-doc sum or the top-k heaps
-            rows = rows.join(
-                F.broadcast(doc_ids.select("doc_id")), "doc_id", "left_semi"
+
+        def kth_score(tid: int) -> float | None:
+            s = scored([tid], 0.0, {})["score"].to_numpy()
+            if len(s) < k:
+                return None
+            return float(np.partition(s, len(s) - k)[len(s) - k])
+
+    else:
+        probe = _probe(index, term_ids)
+
+        def scored(tids, theta, other_max):
+            p = probe if tids == term_ids else probe.filter(
+                F.col("term_id").isin(tids)
             )
-        return rows
+            rows = _decode_score_df(
+                p, idfs, theta, other_max, ranks, field_weights, snap.avgdls
+            )
+            if snap.delta_rows is not None:
+                # latest version wins: base rows of re-ingested or
+                # tombstoned docs drop out (broadcast anti-join on the
+                # small delta doc set), their delta rows take their place
+                delta = snap.delta_rows.filter(F.col("term_id").isin(tids))
+                rows = rows.join(
+                    F.broadcast(snap.superseded), "doc_id", "left_anti"
+                ).unionByName(
+                    _score_rows(delta, idfs, ranks, field_weights, snap.avgdls)
+                )
+            if doc_ids is not None:
+                # metadata filter below the aggregation: pruned docs never
+                # enter the per-doc sum or the top-k heaps
+                rows = rows.join(
+                    F.broadcast(doc_ids.select("doc_id")), "doc_id", "left_semi"
+                )
+            return rows
+
+        def kth_score(tid: int) -> float | None:
+            # TakeOrderedAndProject — no posting blobs reach the driver
+            top = (
+                scored([tid], 0.0, {})
+                .select("score")
+                .orderBy(F.desc("score"))
+                .limit(k)
+                .collect()
+            )
+            return float(top[-1]["score"]) if len(top) == k else None
 
     theta = 0.0
     other_max: dict[int, float] = {}
@@ -563,18 +697,14 @@ def _search(
         if not (sketch_ok and rarest in index.hot_bounds):
             # kth-largest single-term score of the rarest term: k docs
             # achieve at least it and scores are non-negative, so it
-            # lower-bounds the true kth total (TakeOrderedAndProject —
-            # no posting blobs reach the driver)
-            top = (
-                scored([rarest], 0.0, {})
-                .select("score")
-                .orderBy(F.desc("score"))
-                .limit(k)
-                .collect()
-            )
-            if len(top) == k:
-                theta = max(theta, float(top[-1]["score"]))
-    return _sum_topk(scored(term_ids, theta, other_max), len(term_ids), mode, k)
+            # lower-bounds the true kth total
+            top = kth_score(rarest)
+            if top is not None:
+                theta = max(theta, top)
+    parts = scored(term_ids, theta, other_max)
+    if local:
+        return _local_topk(index.spark, parts, len(term_ids), mode, k)
+    return _sum_topk(parts, len(term_ids), mode, k)
 
 
 def search(
@@ -616,7 +746,13 @@ def search(
     Serves the BASE snapshot: between ingest and compact() the index's
     cached lexicon, base stats and hot-term sketches stay valid, so
     planning a hot-rarest query costs zero Spark jobs
-    (search_uncompacted serves the union)."""
+    (search_uncompacted serves the union).
+
+    Serving path: without doc_ids, a query whose bound terms' df sums to
+    at most _LOCAL_MAX_POSTINGS is answered in the driver (pyarrow read,
+    numpy scoring) and returned as an Arrow-backed LocalRelation — no
+    Spark job at all, bit-equal to the distributed plan, which every
+    other query gets (a lazy DataFrame, executed on collect)."""
     index.check_epoch()
     snap = _Snapshot(
         index.bind_terms(query), index.n_docs, index.avgdls, sketches=True
@@ -646,6 +782,63 @@ def _sum_topk(scored: DataFrame, n_bound: int, mode: str, k: int) -> DataFrame:
         .orderBy(F.desc(F.round("score", 6)), F.asc("doc_id"))
         .limit(k)
     )
+
+
+def _local_topk(
+    spark: SparkSession, parts: pd.DataFrame, n_bound: int, mode: str, k: int
+) -> DataFrame:
+    """_sum_topk in the driver, bit-equal by construction: each doc's
+    partials summed in rank order from 0.0 (Spark's aggregate over the
+    rank-sorted parts), AND-mode term-count intersection, then the top-k
+    by (6-dp HALF_UP of the score, desc; doc_id asc) — F.round's key.
+    Rounding is monotone and moves a score by at most 5e-7, so only docs
+    within 1e-6 of the kth raw score can reach the top k: the exact
+    Decimal key is computed for those alone."""
+    docs, inv = np.unique(parts["doc_id"].to_numpy(), return_inverse=True)
+    rank = parts["rank"].to_numpy()
+    score = parts["score"].to_numpy()
+    total = np.zeros(len(docs))
+    for r in range(n_bound):
+        sel = rank == r
+        np.add.at(total, inv[sel], score[sel])
+    if mode == "AND":
+        full = np.bincount(inv, minlength=len(docs)) == n_bound
+        docs, total = docs[full], total[full]
+    if 0 < k < len(total):
+        kth = np.partition(total, len(total) - k)[len(total) - k]
+        near = total >= kth - 1e-6
+        docs, total = docs[near], total[near]
+    top = sorted(
+        zip(docs.tolist(), total.tolist()),
+        key=lambda ds: (-_round_half_up6(ds[1]), ds[0]),
+    )[:k]
+    return _arrow_df(
+        spark,
+        _RESULT_DDL,
+        {
+            "doc_id": [d for d, _ in top],
+            "score": [s for _, s in top],
+        },
+    )
+
+
+def _round_half_up6(x: float) -> Decimal:
+    """6-dp HALF_UP of the float's shortest decimal string — F.round's
+    semantics on a double (Python's round() is half-to-even)."""
+    return Decimal(repr(x)).quantize(_QUANTUM6, rounding=ROUND_HALF_UP)
+
+
+def _arrow_df(
+    spark: SparkSession, ddl: str, columns: dict[str, list] | None = None
+) -> DataFrame:
+    """A driver-built result (empty when ``columns`` is None) as an
+    Arrow-backed LocalRelation with the DDL's column names and types: its
+    collect runs no Spark job (createDataFrame of a Python list is
+    RDD-backed and costs one job per collect)."""
+    schema = arrow_schema(ddl)
+    if columns is None:
+        columns = {f.name: [] for f in schema}
+    return spark.createDataFrame(pa.table(columns, schema=schema), ddl)
 
 
 def search_uncompacted(
@@ -794,13 +987,13 @@ def search_phrase(
 
     snap = uncompacted_snapshot(spark, index.paths)
     tokens = [t for t in normalize_text(phrase).split(" ") if t]
-    empty = spark.createDataFrame([], "doc_id long, score double")
     # ordered binding, duplicates preserved (phrase semantics), through
     # the term binder of the snapshot being served
     uniq = sorted(set(tokens))
     bound = _bind(index, uniq, None if snap is None else snap["lexicon"])
     if not tokens or len(bound) < len(uniq):
-        return empty  # a phrase term is out of lexicon -> no match
+        # a phrase term is out of lexicon -> no match
+        return _arrow_df(spark, _RESULT_DDL)
     tid_map = {b["term"]: tid for tid, b in bound.items()}
     tids = [tid_map[t] for t in tokens]
     pos = spark.read.parquet(index.paths.positions)
@@ -869,7 +1062,7 @@ def search_phrase(
     ).localCheckpoint(eager=True)
     df_phrase = matches.count()
     if df_phrase == 0:
-        return empty
+        return _arrow_df(spark, _RESULT_DDL)
     idf = idf_value(df_phrase, n_docs)
     score = (
         F.lit(idf)
@@ -931,7 +1124,7 @@ def suggest_terms(index: SearchIndex, prefix: str, k: int = 10) -> DataFrame:
     p = prefix.strip().lower()
     spark = index.spark
     if not p:
-        return spark.createDataFrame([], "term string, term_id long, df long")
+        return _arrow_df(spark, "term string, term_id long, df long")
     return (
         index.lexicon.filter(F.col("term").startswith(p))
         .select("term", "term_id", F.col("df").cast("long").alias("df"))
@@ -980,7 +1173,7 @@ def correct_term(
     spark = index.spark
     empty_schema = "term string, term_id long, df long, dist int"
     if not w or " " in w:
-        return spark.createDataFrame([], empty_schema)
+        return _arrow_df(spark, empty_schema)
     dist = F.levenshtein(F.col("term"), F.lit(w), max_dist)
 
     cands = None
@@ -1054,7 +1247,7 @@ def snippets(
     top = search(index, query, k=k).localCheckpoint(eager=True)
     bound = index.bind_terms(query)
     if not bound:
-        return spark.createDataFrame([], out_schema)
+        return _arrow_df(spark, out_schema)
     term_ids = sorted(bound)
     barrels = sorted({tid % index.n_barrels for tid in term_ids})
     pos = (
@@ -1157,7 +1350,7 @@ def search_corrected(
     tokens = [t for t in normalize_text(query).split(" ") if t]
     if not tokens:
         return (
-            index.spark.createDataFrame([], "doc_id long, score double"),
+            _arrow_df(index.spark, _RESULT_DDL),
             {},
         )
     bound = index.bind_terms(query)
@@ -1174,7 +1367,7 @@ def search_corrected(
             out_tokens.append(best[0]["term"])
     if not out_tokens:
         return (
-            index.spark.createDataFrame([], "doc_id long, score double"),
+            _arrow_df(index.spark, _RESULT_DDL),
             corrections,
         )
     # bind the corrected terms AS A LIST (already normalized): joining
@@ -1218,7 +1411,7 @@ def search_many(
     }
     union_terms = sorted({t for b in bound_by_q.values() for t in b})
     if not union_terms:
-        return spark.createDataFrame([], out_schema)
+        return _arrow_df(spark, out_schema)
     dense = {tid: i for i, tid in enumerate(union_terms)}
     idfs = {
         tid: idf_value(
@@ -1244,7 +1437,7 @@ def search_many(
         arity[qid] = len(b)
         fan.extend((dense[tid], qid, qranks[tid]) for tid in b)
     if not fan:
-        return spark.createDataFrame([], out_schema)
+        return _arrow_df(spark, out_schema)
     fan_df = spark.createDataFrame(
         fan, "rank long, query_id long, qrank int"
     )

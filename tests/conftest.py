@@ -99,3 +99,66 @@ def count_collects(spark):
         spark.range(1).collect()
     assert len(calls) == 1, "collect probe does not intercept collect()"
     return probe
+
+
+def _spy_local(monkeypatch) -> list[int]:
+    """Count calls of query._local_topk (the driver-local branch's last
+    step) for the rest of the test."""
+    from search_engine_spark.operators import query
+
+    calls: list[int] = []
+    orig = query._local_topk
+
+    def counting(*a, **kw):
+        calls.append(1)
+        return orig(*a, **kw)
+
+    monkeypatch.setattr(query, "_local_topk", counting)
+    return calls
+
+
+@pytest.fixture
+def local_path(monkeypatch):
+    """The test's searches run query._search's driver-local branch (the
+    default gate): it must have served at least one of them."""
+    calls = _spy_local(monkeypatch)
+    yield calls
+    assert calls, "no search took the driver-local path"
+
+
+@pytest.fixture
+def distributed(monkeypatch):
+    """Force query._search's distributed plan (a gate of 0 postings) for
+    the test; the driver-local branch must never run."""
+    from search_engine_spark.operators import query
+
+    calls = _spy_local(monkeypatch)
+    monkeypatch.setattr(query, "_LOCAL_MAX_POSTINGS", 0)
+    yield
+    assert not calls, "forced-distributed search ran the local path"
+
+
+@pytest.fixture(scope="session")
+def spark_jobs(spark):
+    """Context-manager factory counting the Spark jobs launched in its
+    block, through a statusTracker job group."""
+    import contextlib
+    import uuid
+
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def probe():
+        group = f"probe-{uuid.uuid4()}"
+        jobs: list[int] = []
+        sc.setJobGroup(group, group)
+        try:
+            yield jobs
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+    with probe() as jobs:
+        spark.range(1).collect()
+    assert len(jobs) == 1, "job-group probe does not see a collect's job"
+    return probe

@@ -16,7 +16,9 @@ QUERIES = ["best western", "good well best", "western", "clean room staff"]
 
 
 @pytest.mark.parametrize("query", QUERIES)
-def test_field_weighted_matches_oracle(spark_index, oracle_index, query):
+def test_field_weighted_matches_oracle(
+    spark_index, oracle_index, query, local_path
+):
     got = search_topk(spark_index, query, k=10, field_weights=FW)
     want = oracle.search(oracle_index, query, k=10, field_weights=FW)
     assert [d for d, _ in got] == [d for d, _ in want], query
@@ -26,13 +28,15 @@ def test_field_weighted_matches_oracle(spark_index, oracle_index, query):
 
 
 @pytest.mark.parametrize("query", ["best western", "good well best"])
-def test_field_weighted_wand_lossless(spark_index, query):
+def test_field_weighted_wand_lossless(spark_index, query, local_path):
     a = search_topk(spark_index, query, k=10, field_weights=FW)
     b = search_topk(spark_index, query, k=10, field_weights=FW, use_wand=False)
     assert a == b, query
 
 
-def test_weighted_sketch_theta_engages_and_is_safe(spark_index, oracle_index):
+def test_weighted_sketch_theta_engages_and_is_safe(
+    spark_index, oracle_index, local_path
+):
     """The driver-side theta sketch must serve TITLE-UPWEIGHTED queries
     (its tf1 channel reproduces the decode's wtf): for a query of hot
     (salted) terms the weighted sketch returns a positive theta, that
@@ -61,7 +65,9 @@ def test_weighted_sketch_theta_engages_and_is_safe(spark_index, oracle_index):
     )
 
 
-def test_body_upweighted_lossless_and_matches_oracle(spark_index, oracle_index):
+def test_body_upweighted_lossless_and_matches_oracle(
+    spark_index, oracle_index, local_path
+):
     """The w_title < w_body orientation rides the same sketch path now
     that the sketch stores the REAL (tf1, dl1) channel (pre-upgrade rows
     carry NULLs and are skipped, never zero-filled) — WAND must stay
@@ -80,7 +86,7 @@ def test_body_upweighted_lossless_and_matches_oracle(spark_index, oracle_index):
     )
 
 
-def test_title_term_boosted(spark_index, oracle_index):
+def test_title_term_boosted(spark_index, oracle_index, local_path):
     """A title-only term (the html <title> token t<i>) must score strictly
     higher under title-weighting — proves the tf1 channel carries real
     field information, not zeros."""
@@ -140,3 +146,31 @@ def test_filtered_weighted_compose(spark, spark_index, oracle_index):
     np.testing.assert_array_equal(
         np.array([s for _, s in got]), np.array([s for _, s in want])
     )
+
+
+# the unfiltered BM25F cases above on the forced-distributed plan (their
+# own runs serve driver-local; the doc_ids cases are distributed anyway)
+@pytest.mark.parametrize("query", QUERIES)
+def test_field_weighted_matches_oracle_distributed(
+    spark_index, oracle_index, query, distributed
+):
+    test_field_weighted_matches_oracle(spark_index, oracle_index, query, None)
+
+
+@pytest.mark.parametrize("query", ["best western", "good well best"])
+def test_field_weighted_wand_lossless_distributed(
+    spark_index, query, distributed
+):
+    test_field_weighted_wand_lossless(spark_index, query, None)
+
+
+def test_weighted_theta_body_title_distributed(
+    spark_index, oracle_index, distributed
+):
+    test_weighted_sketch_theta_engages_and_is_safe(
+        spark_index, oracle_index, None
+    )
+    test_body_upweighted_lossless_and_matches_oracle(
+        spark_index, oracle_index, None
+    )
+    test_title_term_boosted(spark_index, oracle_index, None)

@@ -120,7 +120,9 @@ def test_head_term_best_is_salted(spark_index, oracle_index):
 
 
 @pytest.mark.parametrize("query", QUERY_SET)
-def test_topk_rank_identical_bit_equal(spark_index, oracle_index, query):
+def test_topk_rank_identical_bit_equal(
+    spark_index, oracle_index, query, local_path
+):
     exp = oracle.search(oracle_index, query, k=10, mode="OR")
     got = search_topk(spark_index, query, k=10, mode="OR")
     assert [d for d, _ in got] == [d for d, _ in exp], query
@@ -128,7 +130,7 @@ def test_topk_rank_identical_bit_equal(spark_index, oracle_index, query):
         assert gs == es, (query, gd, gs, es)  # bit-equal float64
 
 
-def test_and_mode_intersection(spark_index, oracle_index):
+def test_and_mode_intersection(spark_index, oracle_index, local_path):
     exp = oracle.search(oracle_index, "best western", k=10, mode="AND")
     got = search_topk(spark_index, "best western", k=10, mode="AND")
     assert got == exp
@@ -137,7 +139,7 @@ def test_and_mode_intersection(spark_index, oracle_index):
     assert {d for d, _ in got} <= or_docs
 
 
-def test_out_of_lexicon_term_dropped(spark_index, oracle_index):
+def test_out_of_lexicon_term_dropped(spark_index, oracle_index, local_path):
     """Missing terms silently dropped (app.py:392-401): 'zzzqqq best' ==
     'best'."""
     got = search_topk(spark_index, "zzzqqq best", k=10)
@@ -174,7 +176,9 @@ def test_hot_terms_are_salted(spark_index):
         assert r["total_postings"] == r["df"]
 
 
-def test_salted_term_query_merges_salts(spark, spark_index, oracle_index):
+def test_salted_term_query_merges_salts(
+    spark, spark_index, oracle_index, local_path
+):
     """A single-term query on a SALTED term must still produce oracle-equal
     results (query-side re-merge across salt rows)."""
     from search_engine_spark.oracle import engine as oracle
@@ -185,3 +189,21 @@ def test_salted_term_query_merges_salts(spark, spark_index, oracle_index):
     want = oracle.search(oracle_index, "best", k=10)
     assert [d for d, _ in got] == [d for d, _ in want]
     assert [s for _, s in got] == [s for _, s in want]
+
+
+# the top-k cases above on the forced-distributed plan (their own runs
+# serve driver-local: the local_path fixture checks it)
+@pytest.mark.parametrize("query", QUERY_SET)
+def test_topk_rank_identical_bit_equal_distributed(
+    spark_index, oracle_index, query, distributed
+):
+    test_topk_rank_identical_bit_equal(spark_index, oracle_index, query, None)
+
+
+def test_and_oov_stopword_salted_distributed(
+    spark, spark_index, oracle_index, distributed
+):
+    test_and_mode_intersection(spark_index, oracle_index, None)
+    test_out_of_lexicon_term_dropped(spark_index, oracle_index, None)
+    test_all_stopword_query_empty(spark_index)
+    test_salted_term_query_merges_salts(spark, spark_index, oracle_index, None)

@@ -39,6 +39,19 @@ def codec_pair(spark, tmp_path_factory):
     return SearchIndex(spark, pv), SearchIndex(spark, pp)
 
 
+def _assert_same_topk_both_paths(idx, fresh, monkeypatch) -> None:
+    """idx answers QUERIES like fresh on the driver-local path, then on
+    the forced-distributed plan (gate 0), bit-equal to the local answers."""
+    from search_engine_spark.operators import query
+
+    want = {q: search_topk(fresh, q, k=10) for q in QUERIES}
+    for q in QUERIES:
+        assert search_topk(idx, q, k=10) == want[q], q
+    monkeypatch.setattr(query, "_LOCAL_MAX_POSTINGS", 0)
+    for q in QUERIES:
+        assert search_topk(idx, q, k=10) == want[q], q
+
+
 def test_codec_recorded(codec_pair):
     vi, pi = codec_pair
     assert int(ib.read_stats(vi.spark, vi.paths)["codec"]) == 0
@@ -49,28 +62,28 @@ def test_codec_recorded(codec_pair):
 
 
 @pytest.mark.parametrize("query", QUERIES)
-def test_pfor_topk_bit_equal_varint(codec_pair, query):
+def test_pfor_topk_bit_equal_varint(codec_pair, query, local_path):
     vi, pi = codec_pair
     a = search_topk(vi, query, k=10)
     b = search_topk(pi, query, k=10)
     assert a == b, query  # same docs, same ranks, bit-equal float64
 
 
-def test_pfor_field_weighted_bit_equal(codec_pair):
+def test_pfor_field_weighted_bit_equal(codec_pair, local_path):
     vi, pi = codec_pair
     a = search_topk(vi, "best western", k=10, field_weights=(2.0, 1.0))
     b = search_topk(pi, "best western", k=10, field_weights=(2.0, 1.0))
     assert a == b
 
 
-def test_pfor_and_mode_bit_equal(codec_pair):
+def test_pfor_and_mode_bit_equal(codec_pair, local_path):
     vi, pi = codec_pair
     assert search_topk(vi, "best western", k=10, mode="AND") == search_topk(
         pi, "best western", k=10, mode="AND"
     )
 
 
-def test_compaction_preserves_pfor(spark, tmp_path_factory):
+def test_compaction_preserves_pfor(spark, tmp_path_factory, monkeypatch):
     """Ingest + compact on a pfor index: the rewrite must re-encode with
     the RECORDED codec (like the spell artifact's recorded max_dist) and
     stay bit-equal to a fresh pfor build of the union corpus."""
@@ -106,11 +119,12 @@ def test_compaction_preserves_pfor(spark, tmp_path_factory):
         id_partitions=8, codec="pfor",
     )
     fresh = SearchIndex(spark, fresh_paths)
-    for q in QUERIES:
-        assert search_topk(idx, q, k=10) == search_topk(fresh, q, k=10), q
+    _assert_same_topk_both_paths(idx, fresh, monkeypatch)
 
 
-def test_mixed_codec_barrels_decode_row_by_row(spark, tmp_path_factory):
+def test_mixed_codec_barrels_decode_row_by_row(
+    spark, tmp_path_factory, monkeypatch
+):
     """A varint base whose stats are flipped to pfor before compaction
     yields MIXED barrels (untouched varint rows + re-encoded pfor rows in
     one index) — the per-row codec id must route every blob to the right
@@ -156,5 +170,15 @@ def test_mixed_codec_barrels_decode_row_by_row(spark, tmp_path_factory):
         id_partitions=8,
     )
     fresh = SearchIndex(spark, fresh_paths)
-    for q in QUERIES:
-        assert search_topk(idx, q, k=10) == search_topk(fresh, q, k=10), q
+    _assert_same_topk_both_paths(idx, fresh, monkeypatch)
+
+
+# the codec-pair cases above on the forced-distributed plan
+@pytest.mark.parametrize("query", QUERIES)
+def test_pfor_topk_bit_equal_varint_distributed(codec_pair, query, distributed):
+    test_pfor_topk_bit_equal_varint(codec_pair, query, None)
+
+
+def test_pfor_field_weighted_and_mode_distributed(codec_pair, distributed):
+    test_pfor_field_weighted_bit_equal(codec_pair, None)
+    test_pfor_and_mode_bit_equal(codec_pair, None)

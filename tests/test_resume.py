@@ -30,7 +30,7 @@ def _postings_fingerprint(spark, paths):
     )
 
 
-def test_resume_after_interrupt(spark, tmp_path):
+def test_resume_after_interrupt(spark, tmp_path, monkeypatch, local_path):
     pages = generate_pages_df(spark, N, partitions=4)
 
     # uninterrupted reference build
@@ -67,6 +67,14 @@ def test_resume_after_interrupt(spark, tmp_path):
     idx = SearchIndex(spark, paths)
     ref_idx = SearchIndex(spark, ref_paths)
     assert search_topk(idx, "best western") == search_topk(ref_idx, "best western")
+    # the driver-local read serves the group=G/barrel=B layout: the same
+    # answer as the forced-distributed plan
+    from search_engine_spark.operators import query
+
+    assert "group" in idx.postings_ds.schema.names
+    local = search_topk(idx, "best western good", k=10)
+    monkeypatch.setattr(query, "_LOCAL_MAX_POSTINGS", 0)
+    assert search_topk(idx, "best western good", k=10) == local and local
 
 
 def test_resume_skips_committed_spell_step(spark, tmp_path):
