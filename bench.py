@@ -505,7 +505,7 @@ def main() -> None:
     p.add_argument("--scaling", action="store_true")
     args = p.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     result = run_bench(sf_dir, cpus, args.scaling)
     print(json.dumps(result))
 

@@ -205,144 +205,101 @@ def _gather_ranges(
     return arr[np.repeat(starts, lengths) + within]
 
 
-def pfor_encode_stream(
-    values: np.ndarray, block: int = BLOCK
+def _excl_cumsum(a: np.ndarray) -> np.ndarray:
+    """Start offset of each run given the run lengths."""
+    out = np.zeros(len(a), dtype=np.int64)
+    np.cumsum(a[:-1], out=out[1:])
+    return out
+
+
+# _LOW_BITS[b]: mask of the low b of a value's 64 little-endian bits
+_LOW_BITS = np.arange(64)[None, :] < np.arange(65)[:, None]
+
+
+def pfor_encode_blocks(
+    values: np.ndarray, counts: np.ndarray
 ) -> tuple[bytes, np.ndarray]:
-    """uint64 stream -> (concatenated per-block PFor bytes, per-block byte
-    lengths) — the PFor twin of varint_encode_with_sizes + reduceat.
+    """uint64 stream cut into consecutive blocks of ``counts`` (1..128)
+    values -> (concatenated per-block PFor bytes, per-block byte lengths).
 
     Vectorized across blocks (the scalar _pfor_encode_block is the
     executable spec, property-tested equal): the per-block optimal width
-    comes from a width histogram × cost matrix product, bit-packing runs
-    per DISTINCT width over all full blocks at once, and every block's
-    exception high bits go through ONE varint pass."""
+    comes from a width histogram × cost matrix product, every block's
+    packed area comes out of one masked read of a bit matrix, and every
+    block's exception high bits go through ONE varint pass. Blocks may be
+    short anywhere, so one call encodes many posting lists at once."""
     v = np.ascontiguousarray(values, dtype=np.uint64)
-    n = len(v)
-    if n == 0:
+    counts = np.asarray(counts, dtype=np.int64)
+    nb = len(counts)
+    if nb == 0:
         return b"", np.empty(0, dtype=np.int64)
-    nb = (n + block - 1) // block
-    counts = np.full(nb, block, dtype=np.int64)
-    counts[-1] = n - block * (nb - 1)
-    # padded (nb, block) matrices; pad width 0 never costs or excepts
-    V = np.zeros((nb, block), dtype=np.uint64)
-    V.ravel()[:n] = v
+    n = len(v)
+    blk = np.repeat(np.arange(nb), counts)  # block of every value
+    pos = np.arange(n, dtype=np.int64) - _excl_cumsum(counts)[blk]
     w = _bit_widths(v)
-    W = np.zeros((nb, block), dtype=np.int64)
-    W.ravel()[:n] = w
     # width histogram per block -> exact cost of every candidate width:
     #   cost(b) = ceil(n_blk*b/8) + n_exc(b) + sum_exc ceil((w-b)/7)
-    hist = np.zeros((nb, 65), dtype=np.int64)
-    np.add.at(hist, (np.repeat(np.arange(nb), counts), w), 1)
+    hist = np.bincount(blk * 65 + w, minlength=nb * 65).reshape(nb, 65)
     cand = np.arange(65, dtype=np.int64)
-    is_exc = (np.arange(65)[None, :] > cand[:, None]).astype(np.int64)
-    exc_bytes_per = (
-        np.maximum(np.arange(65)[None, :] - cand[:, None], 0) + 6
-    ) // 7 * is_exc
+    is_exc = (cand[None, :] > cand[:, None]).astype(np.int64)
+    exc_bytes_per = (np.maximum(cand[None, :] - cand[:, None], 0) + 6) // 7 * is_exc
     cost = (
         (counts[:, None] * cand[None, :] + 7) // 8
         + hist @ is_exc.T
         + hist @ exc_bytes_per.T
     )
-    bsel = np.argmin(cost, axis=1).astype(np.int64)
-    # packed low-bit area per block (bytes), grouped by distinct width
-    packed_nbytes = (counts * bsel + 7) // 8
-    packed_parts: list[np.ndarray | None] = [None] * nb
-    full = counts == block  # only the final block can be short
-    for b in np.unique(bsel):
-        b = int(b)
-        sel = np.flatnonzero((bsel == b) & full)
-        if b == 0 or len(sel) == 0:
-            continue
-        # byte-level pack: uint64 -> 64 little-endian bits -> low b bits
-        # per value -> packbits. Stays in uint8 end to end (no 64-bit
-        # multiply-accumulate), ~4x the throughput of the shift-and-sum
-        g = len(sel)
-        allbits = np.unpackbits(
-            V[sel].view(np.uint8).reshape(g, block * 8),
-            axis=1,
-            bitorder="little",
-        ).reshape(g, block, 64)
-        pk = np.packbits(
-            np.ascontiguousarray(allbits[:, :, :b]).reshape(g, block * b),
-            axis=1,
-            bitorder="little",
+    bsel = np.argmin(cost, axis=1).astype(np.int64)  # ties -> smallest b
+    bv = bsel[blk]
+    exc = np.flatnonzero(w > bv)
+    eblk = blk[exc]
+    hbuf, hsz = varint_encode_with_sizes(v[exc] >> bv[exc].astype(np.uint64))
+    ne = np.bincount(eblk, minlength=nb).astype(np.int64)
+    hb = np.zeros(nb, dtype=np.int64)
+    np.add.at(hb, eblk, hsz)
+    pb = (counts * bsel + 7) // 8
+    sizes = 3 + pb + ne + hb
+    off = _excl_cumsum(sizes)
+    out = np.zeros(int(sizes.sum()), dtype=np.uint8)
+    out[off] = counts - 1
+    out[off + 1] = bsel
+    out[off + 2] = ne
+    # packed low bits, LSB-first: a block's area is its values' low b
+    # bits back to back, zero-padded to a byte. One bit matrix over all
+    # values plus one zero "pad value" per block (as wide as the pad)
+    # whose masked row-major read is every packed area in order
+    if int(pb.sum()):
+        ext = np.arange(n, dtype=np.int64) + blk  # value rows among pads
+        pad_row = _excl_cumsum(counts) + counts + np.arange(nb)
+        vx = np.zeros(n + nb, dtype=np.uint64)
+        vx[ext] = v
+        wx = np.empty(n + nb, dtype=np.int64)
+        wx[ext] = bv
+        wx[pad_row] = pb * 8 - counts * bsel
+        bits = np.unpackbits(
+            vx.view(np.uint8).reshape(n + nb, 8), axis=1, bitorder="little"
         )
-        for j, i in enumerate(sel.tolist()):
-            packed_parts[i] = pk[j]
-    if not full[-1]:  # short tail block: scalar spec path
-        tail_enc = _pfor_encode_block(V[-1, : counts[-1]])
-        return (
-            b"".join(
-                _assemble_pfor_blocks(
-                    nb - 1, counts, bsel, packed_parts, W, V, block
-                )
-            )
-            + tail_enc,
-            np.concatenate(
-                (
-                    _pfor_block_sizes(nb - 1, counts, bsel, W),
-                    [len(tail_enc)],
-                )
-            ).astype(np.int64),
-        )
-    chunks = _assemble_pfor_blocks(nb, counts, bsel, packed_parts, W, V, block)
-    return b"".join(chunks), _pfor_block_sizes(nb, counts, bsel, W)
+        packed = np.packbits(bits[_LOW_BITS[wx]], bitorder="little")
+        dest = np.repeat(off + 3 - _excl_cumsum(pb), pb) + np.arange(len(packed))
+        out[dest] = packed
+    if len(exc):
+        # exception positions, then their varint high bits, per block
+        rank = np.arange(len(exc), dtype=np.int64) - _excl_cumsum(ne)[eblk]
+        out[off[eblk] + 3 + pb[eblk] + rank] = pos[exc].astype(np.uint8)
+        hblk = np.repeat(eblk, hsz)
+        j = np.arange(len(hbuf), dtype=np.int64) - _excl_cumsum(hb)[hblk]
+        out[(off + 3 + pb + ne)[hblk] + j] = np.frombuffer(hbuf, dtype=np.uint8)
+    return out.tobytes(), sizes
 
 
-def _pfor_block_sizes(
-    nb: int, counts: np.ndarray, bsel: np.ndarray, W: np.ndarray
-) -> np.ndarray:
-    """Exact on-wire byte size of the first ``nb`` blocks (header + packed
-    + exception positions + exception varint high bits)."""
-    if nb == 0:
-        return np.empty(0, dtype=np.int64)
-    c, b, Wn = counts[:nb], bsel[:nb], W[:nb]
-    exc = Wn > b[:, None]
-    over = np.maximum(Wn - b[:, None], 0)
-    return (
-        3
-        + (c * b + 7) // 8
-        + exc.sum(axis=1)
-        + ((over + 6) // 7 * exc).sum(axis=1)
-    ).astype(np.int64)
-
-
-def _assemble_pfor_blocks(
-    nb: int,
-    counts: np.ndarray,
-    bsel: np.ndarray,
-    packed_parts: list,
-    W: np.ndarray,
-    V: np.ndarray,
-    block: int,
-) -> list[bytes]:
-    """Stitch the first ``nb`` blocks' wire bytes. All numpy work (widths,
-    packing, one varint pass over every exception) is already batched;
-    this loop only slices and concatenates bytes."""
-    if nb == 0:
-        return []
-    exc_mask = W[:nb] > bsel[:nb, None]
-    exc_rows, exc_cols = np.nonzero(exc_mask)
-    n_exc = exc_mask.sum(axis=1)
-    high = V[:nb][exc_rows, exc_cols] >> bsel[:nb][exc_rows].astype(np.uint64)
-    hbuf, hsz = varint_encode_with_sizes(high)
-    hend = np.concatenate(([0], np.cumsum(hsz)))
-    exc_start = np.concatenate(([0], np.cumsum(n_exc)))
-    chunks: list[bytes] = []
-    pos_bytes = exc_cols.astype(np.uint8)
-    for i in range(nb):
-        e0, e1 = int(exc_start[i]), int(exc_start[i + 1])
-        chunks.append(
-            bytes((int(counts[i]) - 1, int(bsel[i]), e1 - e0))
-            + (
-                packed_parts[i].tobytes()
-                if packed_parts[i] is not None
-                else b""
-            )
-            + pos_bytes[e0:e1].tobytes()
-            + hbuf[int(hend[e0]) : int(hend[e1])]
-        )
-    return chunks
+def pfor_encode_stream(
+    values: np.ndarray, block: int = BLOCK
+) -> tuple[bytes, np.ndarray]:
+    """uint64 stream -> (concatenated per-block PFor bytes, per-block byte
+    lengths) in blocks of ``block`` values (the last may be short) — the
+    PFor twin of varint_encode_with_sizes + reduceat."""
+    n = len(values)
+    counts = np.diff(np.append(np.arange(0, n, block), n))
+    return pfor_encode_blocks(values, counts)
 
 
 def _pfor_decode_kept(
@@ -421,18 +378,6 @@ def _deltas_to_docids(vals: np.ndarray, counts: np.ndarray) -> np.ndarray:
     expand = np.repeat(np.arange(len(counts)), counts)
     u = base[expand] + (cs - cs_start[expand])
     return (u - _BIAS).view(np.int64)
-
-
-def _encode_stream(
-    vals: np.ndarray, starts: np.ndarray, cid: int, block: int = BLOCK
-) -> tuple[bytes, np.ndarray]:
-    """Encode one uint64 stream with per-block byte lengths under the
-    chosen codec. ``starts`` are the block boundaries (varint needs them
-    to aggregate per-value sizes; pfor re-blocks at the same stride)."""
-    if cid == CODEC_PFOR:
-        return pfor_encode_stream(vals, block)
-    buf, sz = varint_encode_with_sizes(vals)
-    return buf, np.add.reduceat(sz, starts)
 
 
 def delta_encode_docids(doc_ids: np.ndarray) -> bytes:
@@ -542,10 +487,6 @@ def block_summaries(
     return mt, md
 
 
-def _block_starts(n: int, block: int = BLOCK) -> np.ndarray:
-    return np.arange(0, n, block, dtype=np.int64)
-
-
 def decode_docids_blocks(
     doc_deltas: bytes, db_lens: np.ndarray, codec: int = CODEC_VARINT
 ) -> np.ndarray:
@@ -577,6 +518,171 @@ def decode_docids_blocks(
     return (u - _BIAS).view(np.int64)
 
 
+THETA_K = 16  # real (doc, tf, dl, tf1, dl1) samples kept per group
+
+# encode_posting_groups' per-group block metadata and streams, in
+# POSTINGS_SCHEMA order (operators/index_build.py)
+GROUP_COLS = [
+    "n_docs", "max_tf", "min_dl",
+    "block_max_tf", "block_min_dl", "block_max_tf1",
+    "block_min_dl1", "block_min_dlb",
+    "db_lens", "tf_lens", "dl_lens", "tf1_lens", "dl1_lens",
+    "theta_docs", "theta_tfs", "theta_dls", "theta_tf1s", "theta_dl1s",
+    "doc_deltas", "tfs", "dls", "tf1s", "dls1",
+]
+
+
+def group_starts(*keys: np.ndarray) -> np.ndarray:
+    """First row of every run of equal keys in key-sorted arrays."""
+    n = len(keys[0])
+    if n == 0:
+        return np.empty(0, dtype=np.int64)
+    change = np.zeros(n - 1, dtype=bool)
+    for k in keys:
+        change |= k[1:] != k[:-1]
+    return np.concatenate(([0], np.flatnonzero(change) + 1)).astype(np.int64)
+
+
+def _encode_groups(
+    starts: np.ndarray,
+    d: np.ndarray,
+    t: np.ndarray,
+    l: np.ndarray,
+    t1: np.ndarray,
+    l1: np.ndarray,
+    cid: int,
+    block: int,
+) -> dict[str, tuple]:
+    """encode_posting_groups' numpy pass: {GROUP_COLS name: (values,
+    per-group offsets into them)}; offsets are None for the one-value-
+    per-group columns, and the streams' values are bytes."""
+    n = len(d)
+    sizes = np.diff(np.append(starts, n))
+    grp = np.repeat(np.arange(len(starts)), sizes)
+    # blocks: `block` postings from each group start, the last one short
+    nblk = (sizes + block - 1) // block
+    bfirst = _excl_cumsum(nblk)
+    bgrp = np.repeat(np.arange(len(starts)), nblk)
+    bstarts = starts[bgrp] + (np.arange(int(nblk.sum())) - bfirst[bgrp]) * block
+    bcounts = np.diff(np.append(bstarts, n))
+    group_blocks = np.append(bfirst, len(bstarts))
+
+    def reduce(ufunc, x: np.ndarray, at: np.ndarray) -> np.ndarray:
+        return ufunc.reduceat(x, at) if len(at) else np.empty(0, dtype=np.int64)
+
+    out = {
+        "n_docs": (sizes, None),
+        "max_tf": (reduce(np.maximum, t, starts), None),
+        "min_dl": (reduce(np.minimum, l, starts), None),
+    }
+    for name, ufunc, x in (
+        ("block_max_tf", np.maximum, t),
+        ("block_min_dl", np.minimum, l),
+        ("block_max_tf1", np.maximum, t1),
+        ("block_min_dl1", np.minimum, l1),
+        ("block_min_dlb", np.minimum, l - l1),
+    ):
+        out[name] = (reduce(ufunc, x, bstarts), group_blocks)
+    # doc stream: gaps, restarting from the absolute key at every block
+    u = d.view(np.uint64) + _BIAS
+    deltas = np.empty(n, dtype=np.uint64)
+    deltas[:1] = u[:1]
+    np.subtract(u[1:], u[:-1], out=deltas[1:])
+    deltas[bstarts] = u[bstarts]
+    for name, lens, vals in (
+        ("doc_deltas", "db_lens", deltas),
+        ("tfs", "tf_lens", t),
+        ("dls", "dl_lens", l),
+        ("tf1s", "tf1_lens", t1),
+        ("dls1", "dl1_lens", l1),
+    ):
+        if cid == CODEC_PFOR:
+            buf, blens = pfor_encode_blocks(vals.astype(np.uint64), bcounts)
+        else:
+            buf, sz = varint_encode_with_sizes(vals.astype(np.uint64))
+            blens = reduce(np.add, sz, bstarts)
+        out[lens] = (blens, group_blocks)
+        out[name] = (buf, np.concatenate(([0], np.cumsum(blens)))[group_blocks])
+    # theta samples: each group's first THETA_K rows by (tf desc, dl asc,
+    # row order)
+    order = np.lexsort((np.arange(n), l, -t, grp))
+    top = order[np.arange(n) - starts[grp] < THETA_K]
+    theta_offsets = _excl_cumsum(np.append(np.minimum(sizes, THETA_K), 0))
+    for name, x in (
+        ("theta_docs", d), ("theta_tfs", t), ("theta_dls", l),
+        ("theta_tf1s", t1), ("theta_dl1s", l1),
+    ):
+        out[name] = (x[top], theta_offsets)
+    return out
+
+
+def encode_posting_groups(
+    starts: np.ndarray,
+    doc_ids: np.ndarray,
+    tfs: np.ndarray,
+    dls: np.ndarray,
+    tf1s: np.ndarray,
+    dl1s: np.ndarray,
+    codec: int | str = CODEC_VARINT,
+) -> dict:
+    """Encode every posting list of a row batch in ONE numpy pass.
+
+    Rows are grouped (one group = one posting list, starting at each of
+    ``starts``) and doc_id-sorted within each group. Every group gets
+    INDEPENDENTLY DECODABLE blocks of BLOCK postings: each block's
+    first doc delta is its absolute (+2^63-biased) key, and per-block
+    byte lengths are recorded for all five streams, so a pruned block is
+    never even decompressed — block-max WAND decode skipping.
+
+    ``codec`` picks the stream compression (north rule "varint/PForDelta"
+    pair): CODEC_VARINT (byte-aligned LEB128) or CODEC_PFOR (NewPFD
+    bit-packing + patched exceptions). Block boundaries, block metadata
+    and the lens tables are codec-independent.
+
+    ``tf1s`` is the per-posting TITLE-FIELD tf (the fields channel —
+    reference postings carry per-field matches,
+    create_inverted_index.py:86-91); ``dl1s`` the title-field doc length
+    (denormalized like dls — the true-BM25F per-field norm needs it at
+    score time). block_max_tf1 plus the per-field minima block_min_dl1 /
+    block_min_dlb (body = dl−dl1) keep field-weighted WAND bounds tight.
+
+    The theta sketch is the group's first THETA_K postings ranked
+    (tf desc, dl asc, row order): REAL postings whose achieved BM25,
+    computed at query time with live stats, lower-bounds the true top-k
+    threshold.
+
+    A per-group call costs ~400 µs of numpy dispatch even for one
+    posting; here every step runs once over all groups: one varint (or
+    PFor) pass per stream, reduceat for the block and group extrema, one
+    lexsort for the theta samples. Returns {GROUP_COLS name: Arrow array
+    with one entry per group}, built straight from the offsets: int32
+    n_docs, int64 max_tf/min_dl, list<int64> block metadata, lens and
+    theta samples, binary streams."""
+    import pyarrow as pa
+
+    enc = _encode_groups(
+        np.asarray(starts, dtype=np.int64),
+        *(np.asarray(x, dtype=np.int64) for x in (doc_ids, tfs, dls, tf1s, dl1s)),
+        codec_id(codec), BLOCK,
+    )
+    out = {}
+    for name in GROUP_COLS:
+        vals, offsets = enc[name]
+        if offsets is None:
+            typ = pa.int32() if name == "n_docs" else pa.int64()
+            out[name] = pa.array(vals, typ)
+        elif isinstance(vals, bytes):
+            out[name] = pa.Array.from_buffers(
+                pa.binary(), len(offsets) - 1,
+                [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(vals)],
+            )
+        else:
+            out[name] = pa.ListArray.from_arrays(
+                pa.array(offsets, pa.int32()), pa.array(vals, pa.int64())
+            )
+    return out
+
+
 def encode_posting_blocks(
     doc_ids: np.ndarray,
     tfs: np.ndarray,
@@ -586,27 +692,10 @@ def encode_posting_blocks(
     dl1s: np.ndarray | None = None,
     codec: int | str = CODEC_VARINT,
 ) -> dict:
-    """Sort by doc key and encode one term's postings with INDEPENDENTLY
-    DECODABLE blocks: each block's first doc delta is its absolute
-    (biased) key, and per-block byte lengths are recorded for all four
-    streams, so a pruned block is never even decompressed — true
-    block-max WAND decode skipping, the thing the north rule's
-    MAX_DOCS_TO_PROCESS replacement actually pays off with.
-
-    ``codec`` picks the stream compression (north rule "varint/PForDelta"
-    pair): CODEC_VARINT (default, byte-aligned LEB128) or CODEC_PFOR
-    (NewPFD bit-packing + patched exceptions). Block boundaries, block
-    metadata, and the lens tables are codec-independent — WAND skipping
-    and the decode contract are identical under either.
-
-    ``tf1s`` is the per-posting TITLE-FIELD tf (the fields channel —
-    reference postings carry per-field matches,
-    create_inverted_index.py:86-91); ``dl1s`` the per-posting TITLE-field
-    doc length (constant per doc, denormalized like dls — the true-BM25F
-    per-field length norm needs it at score time). None encodes as
-    all-zero (1 byte per posting, the varint floor). block_max_tf1 plus
-    the per-field minima block_min_dl1 / block_min_dlb (body = dl−dl1)
-    ride along so field-weighted WAND bounds stay tight.
+    """Sort one term's postings by doc key and encode them: the one-group
+    call of encode_posting_groups' kernel (its docstring has the layout).
+    tf1s / dl1s of None encode as all-zero (1 byte per posting, the
+    varint floor).
 
     Returns dict: doc_deltas, tfs, dls, tf1s, dls1 (bytes); db_lens,
     tf_lens, dl_lens, tf1_lens, dl1_lens (per-block byte lengths);
@@ -614,55 +703,27 @@ def encode_posting_blocks(
     block_min_dlb; max_tf, min_dl; n_docs; codec."""
     cid = codec_id(codec)
     order = np.argsort(doc_ids, kind="stable")
-    d = np.asarray(doc_ids, dtype=np.int64)[order]
-    t = np.asarray(tfs, dtype=np.int64)[order]
-    l = np.asarray(dls, dtype=np.int64)[order]
-    if tf1s is None:
-        t1 = np.zeros(len(d), dtype=np.int64)
-    else:
-        t1 = np.asarray(tf1s, dtype=np.int64)[order]
-    if dl1s is None:
-        d1 = np.zeros(len(d), dtype=np.int64)
-    else:
-        d1 = np.asarray(dl1s, dtype=np.int64)[order]
-    n = len(d)
-    mt, md = block_summaries(t, l, block)
-    mt1, md1 = block_summaries(t1, d1, block)
-    _, mdb = block_summaries(t1, l - d1, block)
-    if n == 0:
-        empty = np.empty(0, dtype=np.int64)
-        return {
-            "doc_deltas": b"", "tfs": b"", "dls": b"", "tf1s": b"",
-            "dls1": b"",
-            "db_lens": empty, "tf_lens": empty, "dl_lens": empty,
-            "tf1_lens": empty.copy(), "dl1_lens": empty.copy(),
-            "block_max_tf": mt, "block_min_dl": md, "block_max_tf1": mt1,
-            "block_min_dl1": md1, "block_min_dlb": mdb,
-            "max_tf": 0, "min_dl": 1, "n_docs": 0, "codec": cid,
-        }
-    u = d.view(np.uint64) + _BIAS
-    deltas = np.empty(n, dtype=np.uint64)
-    deltas[0] = u[0]
-    np.subtract(u[1:], u[:-1], out=deltas[1:])
-    starts = _block_starts(n, block)
-    deltas[starts] = u[starts]  # block-local absolute base
-    db, db_lens = _encode_stream(deltas, starts, cid, block)
-    tb, tf_lens = _encode_stream(t.astype(np.uint64), starts, cid, block)
-    lb, dl_lens = _encode_stream(l.astype(np.uint64), starts, cid, block)
-    t1b, tf1_lens = _encode_stream(t1.astype(np.uint64), starts, cid, block)
-    d1b, dl1_lens = _encode_stream(d1.astype(np.uint64), starts, cid, block)
-    return {
-        "doc_deltas": db, "tfs": tb, "dls": lb, "tf1s": t1b, "dls1": d1b,
-        "db_lens": db_lens,
-        "tf_lens": tf_lens,
-        "dl_lens": dl_lens,
-        "tf1_lens": tf1_lens,
-        "dl1_lens": dl1_lens,
-        "block_max_tf": mt, "block_min_dl": md, "block_max_tf1": mt1,
-        "block_min_dl1": md1, "block_min_dlb": mdb,
-        "max_tf": int(t.max()), "min_dl": int(l.min()), "n_docs": n,
-        "codec": cid,
+    n = len(order)
+
+    def col(x):
+        if x is None:
+            return np.zeros(n, dtype=np.int64)
+        return np.asarray(x, dtype=np.int64)[order]
+
+    enc = _encode_groups(
+        np.zeros(min(n, 1), dtype=np.int64),  # no group for no postings
+        col(doc_ids), col(tfs), col(dls), col(tf1s), col(dl1s),
+        cid, block,
+    )
+    out = {
+        c: vals for c, (vals, offsets) in enc.items()
+        if offsets is not None and not c.startswith("theta_")
     }
+    out["max_tf"] = int(enc["max_tf"][0][0]) if n else 0
+    out["min_dl"] = int(enc["min_dl"][0][0]) if n else 1
+    out["n_docs"] = n
+    out["codec"] = cid
+    return out
 
 
 def decode_posting_blocks(
@@ -751,7 +812,6 @@ def decode_posting_blocks(
     # last overall block; recover counts from the tf stream segmentation
     # by decoding per-block sizes via lens -> we already know counts:
     # every block has BLOCK postings except the final one.
-    n_total_last = None  # inferred below
     counts = np.full(len(kept), BLOCK, dtype=np.int64)
     # the only short block is the globally-last one
     if kept[-1] == nb - 1:
@@ -764,7 +824,6 @@ def decode_posting_blocks(
     expand = np.repeat(np.arange(len(kept)), counts)
     u = base[expand] + (cs - cs_start[expand])
     d = (u - _BIAS).view(np.int64)
-    del n_total_last
     out = (d, t, l)
     if with_tf1:
         out = out + (t1,)

@@ -144,7 +144,8 @@ def q_lexicon(spark: SparkSession, sf_dir: str) -> DataFrame:
     order (reference create_parallel_lexicon.py:84 semantics — SURVEY.md
     §2.5 W2). IDs come from index_build.assign_dense_ids — the same
     two-phase range-partition + per-partition-offset assignment the
-    physical build uses — NOT a global row_number window, which would
+    physical build uses above LOCAL_LEXICON_MAX_ROWS terms — NOT a global
+    row_number window, which would
     move the whole vocabulary to one partition (WindowExec "No Partition
     Defined", the 100×-scale killer flagged in round 1)."""
     from search_engine_spark.operators.index_build import assign_dense_ids
@@ -1475,7 +1476,7 @@ def q_bm25_prefix_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     observed vocabulary, then BM25 over the expanded term set (Lucene
     PrefixQuery semantics: each matching term contributes with its own
     df/idf). The engine twin is suggest_terms' pushed-down StartsWith
-    over the range-partitioned lexicon; here the declarative chain
+    over the lexicon; here the declarative chain
     filters the tf table directly and the StartsWith predicate pushes
     into the scan."""
     tf = q_term_tf(spark, sf_dir).filter(

@@ -6,18 +6,18 @@ create_forward_index,create_inverted_index,barrel_manager}.py).
 Shape (north rule): partition-parallel map (extract+tokenize pandas UDF) ->
 tf aggregation -> global lexicon with dense sorted term IDs ->
 repartition-by-(term,salt) shuffle -> sortWithinPartitions ->
-streaming per-group compress (mapInPandas) -> barrel-partitioned parquet. The reference's driver-side
+batched per-partition compress (mapInArrow) -> barrel-partitioned parquet. The reference's driver-side
 reduce bottleneck (create_inverted_index.py:95-161) is exactly what the
 shuffle replaces.
 
 Scale notes (10^12 docs / 1000 executors):
-- No driver-side loops over data; the only .collect() is the P-row partition
-  offset table for dense ID assignment and the 2-scalar (N, total_dl) corpus
-  stats.
+- No driver-side loops over data. The driver collects the corpus stats
+  scalars and, up to LOCAL_LEXICON_MAX_ROWS terms, the per-term stats it
+  numbers into the lexicon (the same table a query handle keeps resident).
 - Doc IDs are deterministic md5-derived (no coordination — hashing.py).
-- Dense term IDs use two-phase range-partitioned assignment (per-partition
-  counts + offsets), not a single-reducer row_number (SURVEY.md §7
-  "Global dense term IDs at scale").
+- Larger lexicons get dense term IDs from two-phase range-partitioned
+  assignment (per-partition counts + offsets), not a single-reducer
+  row_number (SURVEY.md §7 "Global dense term IDs at scale").
 - Hot-term skew: terms with df > salt_threshold are split into
   salt = pmod(doc_id, n_salts) sub-lists, so no single task encodes a
   full Zipf-head posting list (SURVEY.md §4 item 2).
@@ -39,7 +39,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from search_engine_spark.functions.compression import encode_posting_blocks
+from search_engine_spark.functions.compression import THETA_K
 from search_engine_spark.functions.hashing import DOC_ID_HEX_CHARS
 from search_engine_spark.functions.text import (
     extract_fields_series,
@@ -283,7 +283,9 @@ def assign_dense_ids(
     row_number: range-partition by key, sort within partitions, then add
     per-partition offsets (the zipWithIndex pattern; SURVEY.md §2.5 W2).
     Semantically identical to `enumerate(sorted(keys))`
-    (create_parallel_lexicon.py:84)."""
+    (create_parallel_lexicon.py:84). Costs ~8 jobs, so it numbers only
+    what the driver cannot: build_lexicon's lexicons above
+    LOCAL_LEXICON_MAX_ROWS and ingest's new-term extensions."""
     parted = df.repartitionByRange(num_partitions, F.col(key)).sortWithinPartitions(
         key
     )
@@ -327,18 +329,66 @@ def assign_dense_ids(
     return ids
 
 
+# Largest lexicon held in the driver: build_lexicon numbers lexicons up
+# to this size there, and SearchIndex keeps them resident for binding.
+LOCAL_LEXICON_MAX_ROWS = 2_000_000
+
+LEXICON_SCHEMA = (
+    "term string, term_id long, df long, cf long, max_tf long, min_dl long"
+)
+
+
 def build_lexicon(forward: DataFrame, num_partitions: int = 32) -> DataFrame:
     """lexicon(term, term_id, df, cf, max_tf, min_dl) — FIXTURES.md §2;
-    dense sorted IDs. df/cf are the per-term stats BM25 IDF needs
-    (SURVEY.md §2.4 A8); (max_tf, min_dl) is the term-level WAND upper
-    bound input, kept here so query planning needs NO probe-metadata
-    aggregation job — the bound comes with the term binding."""
+    dense IDs in term order (UTF-8 bytes, Spark's string order). df/cf
+    are the per-term stats BM25 IDF needs (SURVEY.md §2.4 A8); (max_tf,
+    min_dl) is the term-level WAND upper bound input, kept here so query
+    planning needs NO probe-metadata aggregation job — the bound comes
+    with the term binding.
+
+    The per-term stats are collected ONCE (limit(N+1).toArrow(), N =
+    LOCAL_LEXICON_MAX_ROWS). When they fit, the driver sorts and numbers
+    them — the reference's enumerate(sorted(keys))
+    (create_parallel_lexicon.py:84) — and returns them as an
+    Arrow-backed DataFrame. Only a larger lexicon pays assign_dense_ids'
+    range-partitioned numbering (~8 jobs)."""
+    import pyarrow as pa
+
     stats = forward.groupBy("term").agg(
         F.count("*").alias("df"),
         F.sum("tf").alias("cf"),
         F.max("tf").cast("long").alias("max_tf"),
         F.min("dl").cast("long").alias("min_dl"),
     )
+    spark = forward.sparkSession
+    n_max = LOCAL_LEXICON_MAX_ROWS
+    if n_max:
+        # one job: adaptive execution would run the aggregate's shuffle
+        # map stage as a job of its own, and re-planning a collect of at
+        # most N+1 rows buys nothing (800-page corpus on a 4-core host:
+        # 0.35-0.47 s vs 0.57-0.73 s)
+        aqe = spark.conf.get("spark.sql.adaptive.enabled")
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            tbl = stats.limit(n_max + 1).toArrow()
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        if tbl.num_rows <= n_max:
+            # Arrow orders strings by their UTF-8 bytes, as Spark does
+            tbl = tbl.sort_by("term")
+            lex = pa.table(
+                {
+                    "term": tbl.column("term"),
+                    "term_id": pa.array(np.arange(tbl.num_rows), pa.int64()),
+                    **{c: tbl.column(c) for c in ("df", "cf", "max_tf", "min_dl")},
+                },
+                schema=arrow_schema(LEXICON_SCHEMA),
+            )
+            # one partition, so the lexicon is written as ONE file: each
+            # file becomes a scan partition of every later lexicon join,
+            # and ingest's join of a small batch against a 4-file lexicon
+            # wrote 4 delta files per barrel (delta bytes/page +75%)
+            return spark.createDataFrame(lex, LEXICON_SCHEMA).coalesce(1)
     ids = assign_dense_ids(
         stats.select("term"), "term", "term_id", num_partitions
     )
@@ -382,8 +432,6 @@ def idf_value(df: int, n_docs: int) -> float:
     correctness')."""
     return math.log((n_docs - df + 0.5) / (df + 0.5) + 1.0)
 
-
-THETA_K = 16  # real (doc, tf, dl) samples kept per (term, salt) blob
 
 # the columns a blob DECODE actually consumes (query-side adds the
 # block-max metadata; weighted mode adds the tf1 stream) — shared by the
@@ -496,125 +544,82 @@ def salt_col(n_salts: int, salt_threshold: int):
 def encode_postings(
     joined: DataFrame, n_barrels: int = 64, codec: int | str = "varint"
 ) -> DataFrame:
-    """(term_id, df, doc_id, tf, dl, salt) rows -> compressed blob rows
-    (POSTINGS_SCHEMA + barrel). Shared by the batch build and the
-    incremental compactor (streaming/incremental.py). ``codec`` picks the
-    stream compression per the north rule's varint/PForDelta pair; the
-    id is stamped on every row so mixed-codec barrels (an old varint
-    base compacted by a pfor-configured writer, or vice versa) decode
-    correctly row by row.
+    """(term_id, df, doc_id, tf, tf1, dl, dl1, salt) rows -> compressed
+    blob rows (POSTINGS_SCHEMA + barrel). Shared by the batch build, the
+    resumable build and the incremental compactor
+    (streaming/incremental.py). ``codec`` picks the stream compression per
+    the north rule's varint/PForDelta pair; the id is stamped on every
+    row so mixed-codec barrels (an old varint base compacted by a
+    pfor-configured writer, or vice versa) decode correctly row by row.
 
     One shuffle co-locating each (term_id, salt) group, sorted so groups
     are contiguous AND postings are already doc_id-ordered (the
     sortWithinPartitions(term_id, doc_id) merge, SURVEY.md §2.6 O5).
-    Encoding then runs per PARTITION via mapInPandas with streaming
-    group-boundary detection — groupBy().applyInPandas() would build a
-    pandas DataFrame per group, and with Zipf vocabularies most groups
-    are singletons, so per-group overhead dominates the whole build
-    (measured 3x the cost of this formulation at 100k docs)."""
-    from search_engine_spark.functions.compression import codec_id
+    Encoding then runs per Arrow batch via mapInArrow: ONE
+    compression.encode_posting_groups call encodes every group the batch
+    completes, and the group still open at the batch's end is carried
+    into the next batch. With Zipf vocabularies most groups are
+    singletons, so a per-group encode call (~400 µs of numpy dispatch
+    each) used to dominate the build: 10.7k groups of the 6,000-page
+    bench corpus took 5.0 s of CPU that way, 0.15 s batched."""
+    import pyarrow as pa
 
-    cid = codec_id(codec)
-    parted = joined.repartition("term_id", "salt").sortWithinPartitions(
-        "term_id", "salt", "doc_id"
+    from search_engine_spark.functions.compression import (
+        GROUP_COLS,
+        codec_id,
+        encode_posting_groups,
+        group_starts,
     )
 
-    def encode_rows(pdf: pd.DataFrame, out: dict[str, list]) -> None:
-        """pdf: doc-sorted rows of ≥1 COMPLETE groups; append encoded rows."""
-        tid = pdf["term_id"].to_numpy(dtype=np.int64)
-        salt = pdf["salt"].to_numpy(dtype=np.int64)
-        d = pdf["doc_id"].to_numpy(dtype=np.int64)
-        t = pdf["tf"].to_numpy(dtype=np.int64)
-        t1 = pdf["tf1"].to_numpy(dtype=np.int64)
-        l = pdf["dl"].to_numpy(dtype=np.int64)
-        l1 = pdf["dl1"].to_numpy(dtype=np.int64)
-        dfv = pdf["df"].to_numpy(dtype=np.int64)
-        n = len(pdf)
-        starts = np.concatenate(
-            ([0], np.flatnonzero((tid[1:] != tid[:-1]) | (salt[1:] != salt[:-1])) + 1)
-        )
-        ends = np.concatenate((starts[1:], [n]))
-        for s, e in zip(starts.tolist(), ends.tolist()):
-            ds_, ts_, t1s_, ls_, l1s_ = (
-                d[s:e], t[s:e], t1[s:e], l[s:e], l1[s:e]
-            )
-            enc = encode_posting_blocks(
-                ds_, ts_, ls_, t1s_, dl1s=l1s_, codec=cid
-            )
-            # theta sketch: THETA_K REAL postings ranked (tf desc, dl asc)
-            # — a high-score sample whose achieved BM25 (computed at query
-            # time with live stats) lower-bounds the true top-k threshold
-            top = np.lexsort((ls_, -ts_))[:THETA_K]
-            out["term_id"].append(tid[s])
-            out["salt"].append(salt[s])
-            out["df"].append(dfv[s])
-            out["n_docs"].append(e - s)
-            out["max_tf"].append(enc["max_tf"])
-            out["min_dl"].append(enc["min_dl"])
-            out["block_max_tf"].append(enc["block_max_tf"].tolist())
-            out["block_min_dl"].append(enc["block_min_dl"].tolist())
-            out["block_max_tf1"].append(enc["block_max_tf1"].tolist())
-            out["block_min_dl1"].append(enc["block_min_dl1"].tolist())
-            out["block_min_dlb"].append(enc["block_min_dlb"].tolist())
-            out["db_lens"].append(enc["db_lens"].tolist())
-            out["tf_lens"].append(enc["tf_lens"].tolist())
-            out["dl_lens"].append(enc["dl_lens"].tolist())
-            out["tf1_lens"].append(enc["tf1_lens"].tolist())
-            out["dl1_lens"].append(enc["dl1_lens"].tolist())
-            out["theta_docs"].append(ds_[top].tolist())
-            out["theta_tfs"].append(ts_[top].tolist())
-            out["theta_dls"].append(ls_[top].tolist())
-            # the field channel (tf1, dl1) rides along so WEIGHTED queries
-            # get a driver-side theta too: the sketch's achieved score is
-            # computed with the SAME true-BM25F per-field norm the decode
-            # scores with (query._sketch_theta)
-            out["theta_tf1s"].append(t1s_[top].tolist())
-            out["theta_dl1s"].append(l1s_[top].tolist())
-            out["doc_deltas"].append(enc["doc_deltas"])
-            out["tfs"].append(enc["tfs"])
-            out["dls"].append(enc["dls"])
-            out["tf1s"].append(enc["tf1s"])
-            out["dls1"].append(enc["dls1"])
-            out["codec"].append(cid)
+    cid = codec_id(codec)
+    parted = joined.select(*_ENCODE_IN_COLS).repartition(
+        "term_id", "salt"
+    ).sortWithinPartitions("term_id", "salt", "doc_id")
 
-    _COLS = [
-        "term_id", "salt", "df", "n_docs", "max_tf", "min_dl",
-        "block_max_tf", "block_min_dl", "block_max_tf1",
-        "block_min_dl1", "block_min_dlb",
-        "db_lens", "tf_lens", "dl_lens", "tf1_lens", "dl1_lens",
-        "theta_docs", "theta_tfs", "theta_dls", "theta_tf1s", "theta_dl1s",
-        "doc_deltas", "tfs", "dls", "tf1s", "dls1", "codec",
-    ]
+    def encode(rows: dict[str, np.ndarray], starts: np.ndarray) -> pa.RecordBatch:
+        enc = encode_posting_groups(
+            starts, rows["doc_id"], rows["tf"], rows["dl"], rows["tf1"],
+            rows["dl1"], cid,
+        )
+        head = {
+            "term_id": pa.array(rows["term_id"][starts], pa.int64()),
+            "salt": pa.array(rows["salt"][starts], pa.int32()),
+            "df": pa.array(rows["df"][starts], pa.int64()),
+            "codec": pa.array(np.full(len(starts), cid), pa.int32()),
+        }
+        return pa.RecordBatch.from_arrays(
+            [head[c] if c in head else enc[c] for c in _POSTINGS_COLS], _POSTINGS_COLS
+        )
 
     def encode_partition(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        tail: pd.DataFrame | None = None  # open group spanning batches
-        for pdf in batches:
+        batches: Iterator[pa.RecordBatch],
+    ) -> Iterator[pa.RecordBatch]:
+        tail: dict[str, np.ndarray] | None = None  # group open at batch end
+        for batch in batches:
+            rows = {
+                c: batch.column(c).to_numpy(zero_copy_only=False)
+                for c in _ENCODE_IN_COLS
+            }
             if tail is not None:
-                pdf = pd.concat([tail, pdf], ignore_index=True)
-            tid = pdf["term_id"].to_numpy()
-            salt = pdf["salt"].to_numpy()
-            changes = np.flatnonzero(
-                (tid[1:] != tid[:-1]) | (salt[1:] != salt[:-1])
-            )
-            if len(changes) == 0:
-                tail = pdf  # whole batch is one (possibly open) group
+                rows = {c: np.concatenate((tail[c], rows[c])) for c in rows}
+            starts = group_starts(rows["term_id"], rows["salt"])
+            if len(starts) < 2:  # one (possibly open) group so far
+                tail = rows
                 continue
-            cut = int(changes[-1]) + 1  # last group may continue next batch
-            complete, tail = pdf.iloc[:cut], pdf.iloc[cut:].reset_index(drop=True)
-            out: dict[str, list] = {c: [] for c in _COLS}
-            encode_rows(complete, out)
-            yield pd.DataFrame(out)
-        if tail is not None and len(tail):
-            out = {c: [] for c in _COLS}
-            encode_rows(tail, out)
-            yield pd.DataFrame(out)
+            cut = int(starts[-1])  # the last group may continue
+            tail = {c: v[cut:] for c, v in rows.items()}
+            yield encode({c: v[:cut] for c, v in rows.items()}, starts[:-1])
+        if tail is not None and len(tail["term_id"]):
+            yield encode(tail, group_starts(tail["term_id"], tail["salt"]))
 
-    postings = parted.mapInPandas(encode_partition, schema=POSTINGS_SCHEMA)
+    postings = parted.mapInArrow(encode_partition, schema=POSTINGS_SCHEMA)
     return postings.withColumn(
         "barrel", F.pmod("term_id", F.lit(n_barrels)).cast("int")
     )
+
+
+_ENCODE_IN_COLS = ["term_id", "salt", "df", "doc_id", "tf", "tf1", "dl", "dl1"]
+_POSTINGS_COLS = [c.strip().split(" ")[0] for c in POSTINGS_SCHEMA.split(",")]
 
 
 # ---------------------------------------------------------------------------
@@ -825,7 +830,7 @@ def build_index_from_docs(
     docs.cache()
     doc_stats = build_doc_stats(docs)
     doc_stats.write.mode("overwrite").parquet(out.doc_stats)
-    doc_stats = spark.read.parquet(out.doc_stats)
+    doc_stats = read_parquet(spark, out.doc_stats)
     n_docs, total_dl, total_dl1 = corpus_totals(doc_stats)
     avgdl = float(total_dl) / n_docs if n_docs else 0.0
     avgdl1, avgdlb = field_avgdls(n_docs, total_dl, total_dl1)
@@ -837,7 +842,7 @@ def build_index_from_docs(
     forward.cache()
     lexicon = build_lexicon(forward, id_partitions)
     lexicon.write.mode("overwrite").parquet(out.lexicon)
-    lexicon = spark.read.parquet(out.lexicon)
+    lexicon = read_parquet(spark, out.lexicon)
 
     postings = build_postings(
         forward, lexicon, doc_stats,
@@ -970,19 +975,30 @@ def build_hot_bounds(
     )
 
 
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """spark.read.parquet with the schema (hive partition columns
+    included) taken from the footer pyarrow reads driver-side: Spark's
+    own schema inference runs one job per read, and an index open reads
+    three tables. The read stays lazy."""
+    import pyarrow.dataset as pads
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    schema = pads.dataset(path, format="parquet", partitioning="hive").schema
+    return spark.read.schema(from_arrow_schema(schema)).parquet(path)
+
+
 def read_postings(spark: SparkSession, path: str) -> DataFrame:
     """Read a postings directory, tolerating the empty-corpus case: a
-    partitionBy() write of 0 rows creates no data files, so schema
-    inference fails — fall back to an empty DataFrame with the canonical
+    partitionBy() write of 0 rows creates no data files, so there is no
+    schema to read — fall back to an empty DataFrame with the canonical
     schema.
 
     The per-row ``codec`` id is normalized here: a pre-codec index has no
     such column (→ varint, 0) and a mixed compaction union may carry
     NULLs on untouched legacy rows (allowMissingColumns back-fill) — the
     decode paths always see a non-null int."""
-    try:
-        df = spark.read.parquet(path)
-    except Exception:  # AnalysisException: unable to infer schema
+    df = read_parquet(spark, path)
+    if not df.columns:
         return spark.createDataFrame([], POSTINGS_SCHEMA + ", barrel int")
     if "codec" not in df.columns:
         return df.withColumn("codec", F.lit(0).cast("int"))
@@ -992,8 +1008,9 @@ def read_postings(spark: SparkSession, path: str) -> DataFrame:
 
 
 def read_stats(spark: SparkSession, out: IndexPaths) -> dict:
-    r = spark.read.parquet(out.stats).collect()[0]
-    return {k: r[k] for k in r.asDict()}
+    """The index's one-row stats table, read driver-side (no Spark job);
+    ``spark`` is unused and kept for the (spark, paths) reader shape."""
+    return read_scalar_parquet(out.stats)
 
 
 _PA_TYPES = {

@@ -67,6 +67,7 @@ in tests/test_wand.py.
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
 from decimal import ROUND_HALF_UP, Decimal
 from typing import Iterator
@@ -74,6 +75,7 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.dataset as pads
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -89,9 +91,12 @@ from search_engine_spark.operators.index_build import (
     DECODE_FIELD_BOUND_COLS,
     DECODE_TF1_COLS,
     K1,
+    LOCAL_LEXICON_MAX_ROWS,
     IndexPaths,
     arrow_schema,
     idf_value,
+    read_parquet,
+    read_postings,
     read_stats,
 )
 from search_engine_spark.functions.text import normalize_text
@@ -121,7 +126,7 @@ class SearchIndex:
         self,
         spark: SparkSession,
         paths: IndexPaths,
-        local_lexicon_max_rows: int = 2_000_000,
+        local_lexicon_max_rows: int = LOCAL_LEXICON_MAX_ROWS,
     ):
         self.spark = spark
         self.paths = paths
@@ -141,20 +146,16 @@ class SearchIndex:
         self.avgdl1 = float(stats["avgdl1"])
         self.avgdlb = float(stats["avgdlb"])
         self.n_barrels = int(stats["n_barrels"])
-        self.lexicon = spark.read.parquet(paths.lexicon)
-        from search_engine_spark.operators.index_build import read_postings
-
+        self.lexicon = read_parquet(spark, paths.lexicon)
         self.postings = read_postings(spark, paths.postings)
         # the same barrels for driver-local serving (_read_probe), hive-
         # partitioned so both the barrel=B and resumable_build's
         # group=G/barrel=B layouts expose a barrel column; opened here so
         # refresh() re-lists the files a compaction rewrote
-        import pyarrow.dataset as pads
-
         self.postings_ds = pads.dataset(
             paths.postings, format="parquet", partitioning="hive"
         )
-        self.doc_stats = spark.read.parquet(paths.doc_stats)
+        self.doc_stats = read_parquet(spark, paths.doc_stats)
         # hot-term theta sketches (tiny: one row per SALTED term) — the
         # driver-side WAND threshold source for Zipf-head queries
         # Driver-memory cap: one tiny row (≤THETA_K postings) per HOT term;
@@ -166,10 +167,9 @@ class SearchIndex:
         # sketch.
         self.hot_bounds: dict[int, tuple] = {}
         max_hot_terms = 200_000
-        import os
-
         if os.path.exists(paths.hot_bounds):
-            for r in spark.read.parquet(paths.hot_bounds).take(max_hot_terms):
+            hb = pads.dataset(paths.hot_bounds, format="parquet")
+            for r in hb.head(max_hot_terms).to_pylist():
                 self.hot_bounds[int(r["term_id"])] = (
                     np.asarray(r["docs"], dtype=np.int64),
                     np.asarray(r["tfs"], dtype=np.float64),
@@ -177,13 +177,15 @@ class SearchIndex:
                     np.asarray(r["tf1s"], dtype=np.float64),
                     np.asarray(r["dl1s"], dtype=np.float64),
                 )
+        # the resident lexicon, sized from the parquet footers
         self._local_lexicon: dict[str, dict] | None = None
-        if local_lexicon_max_rows:
-            # single scan: take(max+1) both sizes the lexicon and fetches
-            # it (count()+collect() would scan twice on every open/refresh)
-            rows = self.lexicon.take(local_lexicon_max_rows + 1)
-            if len(rows) <= local_lexicon_max_rows:
-                self._local_lexicon = {r["term"]: _lex_entry(r) for r in rows}
+        lex = pads.dataset(paths.lexicon, format="parquet")
+        if local_lexicon_max_rows and lex.count_rows() <= local_lexicon_max_rows:
+            cols = lex.to_table(columns=_LEX_COLS).to_pydict()
+            self._local_lexicon = {
+                term: dict(zip(_LEX_COLS[1:], vals))
+                for term, *vals in zip(*(cols[c] for c in _LEX_COLS))
+            }
 
     @property
     def avgdls(self) -> tuple[float, float, float]:
@@ -290,7 +292,6 @@ def _read_probe(
     …`` rows and decode columns, read through the pyarrow dataset, with a
     null codec coalesced to 0 (varint) as read_postings does."""
     import pyarrow.compute as pc
-    import pyarrow.dataset as pads
 
     ds = index.postings_ds
     barrels = sorted({tid % index.n_barrels for tid in term_ids})
@@ -970,7 +971,6 @@ def search_phrase(
     computed driver-side from that df scalar (math.log — bit-parity with
     the oracle) and enters the plan as a literal. The returned plan stays
     LAZY — no collect/createDataFrame round-trip of result rows."""
-    import os
 
     index.check_epoch()
     spark = index.spark
@@ -1107,11 +1107,12 @@ def suggest_terms(index: SearchIndex, prefix: str, k: int = 10) -> DataFrame:
     (the signal the reference's lexicon probe exposes, app.py:392-401,
     extended to the type-ahead read pattern). -> (term, term_id, df).
 
-    Plan: StringStartsWith is a pushable parquet filter, and the lexicon
-    is written range-partitioned by term (assign_dense_ids), so at a
-    10^9-term lexicon the scan prunes to the prefix's term range before
-    the TakeOrderedAndProject top-k. Empty/whitespace prefixes return
-    empty (a full-lexicon popularity dump is a different query).
+    Plan: StringStartsWith is a pushable parquet filter ahead of the
+    TakeOrderedAndProject top-k. The lexicon is NOT range-partitioned by
+    term: a driver-numbered build writes it as one file in term order,
+    an assign_dense_ids build and compaction in join order, so the
+    filter runs over the whole lexicon scan. Empty/whitespace prefixes
+    return empty (a full-lexicon popularity dump is a different query).
 
     The prefix is only LOWERCASED, not run through normalize_text: a
     prefix is not a full token — stopword removal would empty "we" (→
@@ -1166,7 +1167,6 @@ def correct_term(
     stopword filter could delete it and the rule lemmatizer could rewrite
     the typo before correction sees it."""
     import json
-    import os
 
     index.check_epoch()
     w = word.strip().lower()
@@ -1232,7 +1232,6 @@ def snippets(
     the pages join is k rows broadcast against the source scan — text
     never shuffles, and only k docs' html is ever re-normalized (the
     mapInPandas runs after a broadcast semi-join prunes the scan)."""
-    import os
 
     from search_engine_spark.operators import index_build as ib
     from search_engine_spark.functions.compression import (

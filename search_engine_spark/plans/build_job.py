@@ -119,7 +119,7 @@ def resumable_build(
                 "input_files": lineage,
             }
         )
-    doc_stats = spark.read.parquet(out.doc_stats)
+    doc_stats = ib.read_parquet(spark, out.doc_stats)
     n_docs, total_dl, total_dl1 = ib.corpus_totals(doc_stats)
     avgdl = float(total_dl) / n_docs if n_docs else 0.0
     avgdl1, avgdlb = ib.field_avgdls(n_docs, total_dl, total_dl1)
@@ -144,7 +144,7 @@ def resumable_build(
                 "input_files": lineage,
             }
         )
-    lexicon = spark.read.parquet(out.lexicon)
+    lexicon = ib.read_parquet(spark, out.lexicon)
 
     # -- steps: postings per barrel group ------------------------------------
     # filter by barrel BELOW the encode shuffle: each group shuffles and

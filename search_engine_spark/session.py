@@ -17,14 +17,14 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = max(8, int(cpus) if cpus.isdigit() else 32)
     # scaling-measurement hook (tools/scaling_campaign.py): e.g.
     # -XX:ActiveProcessorCount=N so the JVM sizes GC/JIT thread pools for
-    # the measured core budget instead of the host's 32 — without it a
-    # local[4] run borrows ~32-core GC parallelism and the N->4N
+    # the measured core budget instead of the host's — without it a
+    # local[4] run borrows the whole host's GC parallelism and the N->4N
     # comparison undercounts the 4-core cost
     java_opts = os.environ.get("SPARK_GRAFT_JAVA_OPTS", "")
     builder = (

@@ -346,3 +346,99 @@ def test_pfor_smaller_on_clustered_gaps():
     ep = encode_posting_blocks(d, t, l, codec="pfor")
     assert len(ep["doc_deltas"]) < len(ev["doc_deltas"]) / 2
     assert len(ep["tfs"]) < len(ev["tfs"]) / 2
+
+
+# --- batched encode kernel vs the per-group wire spec ----------------------
+
+
+def _spec_encode_group(d, t, l, t1, d1, codec):
+    """The wire format of ONE doc-sorted posting list, encoded on its own:
+    blocks of BLOCK postings from the list's start (the last may be
+    short), each block's first doc delta its absolute +2^63-biased key,
+    per-block byte lengths for all five streams, per-block extrema, and
+    the first THETA_K postings by (tf desc, dl asc, row order). PFor
+    blocks come from the scalar per-block spec."""
+    from search_engine_spark.functions.compression import (
+        _BIAS,
+        CODEC_PFOR,
+        THETA_K,
+        _pfor_encode_block,
+        block_summaries,
+        varint_encode_with_sizes,
+    )
+
+    n = len(d)
+    starts = np.arange(0, n, BLOCK)
+    u = d.view(np.uint64) + _BIAS
+    deltas = np.concatenate((u[:1], u[1:] - u[:-1]))
+    deltas[starts] = u[starts]
+
+    def stream(vals):
+        vals = vals.astype(np.uint64)
+        if codec == CODEC_PFOR:
+            blocks = [_pfor_encode_block(vals[s : s + BLOCK]) for s in starts]
+            return b"".join(blocks), [len(b) for b in blocks]
+        buf, sz = varint_encode_with_sizes(vals)
+        return buf, np.add.reduceat(sz, starts).tolist()
+
+    mt, md = block_summaries(t, l)
+    mt1, md1 = block_summaries(t1, d1)
+    _, mdb = block_summaries(t1, l - d1)
+    top = np.lexsort((l, -t))[:THETA_K]
+    out = {
+        "n_docs": n, "max_tf": int(t.max()), "min_dl": int(l.min()),
+        "block_max_tf": mt.tolist(), "block_min_dl": md.tolist(),
+        "block_max_tf1": mt1.tolist(), "block_min_dl1": md1.tolist(),
+        "block_min_dlb": mdb.tolist(),
+        "theta_docs": d[top].tolist(), "theta_tfs": t[top].tolist(),
+        "theta_dls": l[top].tolist(), "theta_tf1s": t1[top].tolist(),
+        "theta_dl1s": d1[top].tolist(),
+    }
+    for name, lens, vals in (
+        ("doc_deltas", "db_lens", deltas), ("tfs", "tf_lens", t),
+        ("dls", "dl_lens", l), ("tf1s", "tf1_lens", t1),
+        ("dls1", "dl1_lens", d1),
+    ):
+        out[name], out[lens] = stream(vals)
+    return out
+
+
+@given(
+    st.lists(st.sampled_from([1, 2, 127, 128, 129, 257]), max_size=8),
+    st.booleans(),
+    st.integers(min_value=0, max_value=2**32 - 1),
+)
+@settings(max_examples=60, deadline=None, derandomize=True)
+def test_group_kernel_equals_per_group_spec(sizes, with_fields, seed):
+    """encode_posting_groups over a whole batch == the per-group wire
+    spec, byte for byte, for both codecs: group sizes around the block
+    edge, zero and nonzero tf1/dl1, tied tf/dl (theta order), wide doc
+    gaps and tf outliers (PFor exceptions), and the empty batch."""
+    from search_engine_spark.functions.compression import (
+        GROUP_COLS,
+        encode_posting_groups,
+    )
+
+    rng = np.random.default_rng(seed)
+    n = sum(sizes)
+    d = np.concatenate(
+        [np.sort(rng.choice(2**62, s, replace=False)) - 2**61 for s in sizes]
+        or [np.empty(0, dtype=np.int64)]
+    ).astype(np.int64)
+    t = rng.integers(1, 4, n)
+    t[rng.random(n) < 0.02] = 2**40  # exceptions in an otherwise narrow block
+    l = rng.integers(1, 30, n)
+    t1 = rng.integers(0, 2, n) if with_fields else np.zeros(n, dtype=np.int64)
+    d1 = np.minimum(rng.integers(0, 5, n), l) if with_fields else t1
+    starts = np.cumsum([0] + sizes)[:-1].astype(np.int64)
+    for codec in (0, 1):
+        enc = encode_posting_groups(starts, d, t, l, t1, d1, codec)
+        assert set(enc) == set(GROUP_COLS)
+        got = {c: enc[c].to_pylist() for c in GROUP_COLS}
+        assert all(len(v) == len(sizes) for v in got.values())
+        for i, (s, k) in enumerate(zip(starts, sizes)):
+            spec = _spec_encode_group(
+                d[s : s + k], t[s : s + k], l[s : s + k], t1[s : s + k],
+                d1[s : s + k], codec,
+            )
+            assert {c: got[c][i] for c in GROUP_COLS} == spec

@@ -62,6 +62,33 @@ def test_empty_results_launch_no_spark_job(spark_index, spark_jobs):
     assert [df.dtypes for df, _ in cases] == [want for _, want in cases]
 
 
+def test_open_and_refresh_launch_no_spark_job(spark, spark_index, spark_jobs):
+    """Opening a handle reads stats, hot_bounds and the resident lexicon
+    with pyarrow and takes the lazy tables' schemas from the parquet
+    footers: no Spark job, and the same tables Spark's own reads give."""
+    paths = spark_index.paths
+    with spark_jobs() as jobs:
+        idx = query.SearchIndex(spark, paths)
+        again = idx.refresh()
+    assert jobs == [], jobs
+    for handle in (idx, again):
+        assert handle._local_lexicon == {
+            r["term"]: {c: int(r[c]) for c in ("term_id", "df", "max_tf", "min_dl")}
+            for r in spark.read.parquet(paths.lexicon).collect()
+        }
+        assert handle.hot_bounds.keys() == {
+            r["term_id"] for r in spark.read.parquet(paths.hot_bounds).collect()
+        }
+        assert handle.n_docs == spark_index.n_docs
+        assert handle.avgdls == spark_index.avgdls
+        for lazy, path in (
+            (handle.lexicon, paths.lexicon),
+            (handle.doc_stats, paths.doc_stats),
+            (handle.postings.drop("codec"), paths.postings),
+        ):
+            assert lazy.dtypes == spark.read.parquet(path).drop("codec").dtypes
+
+
 def _three_way(idx, oracle_idx, spark_jobs, text, mode, fw, k) -> None:
     want = oracle.search(oracle_idx, text, k, mode, fw)
     with spark_jobs() as jobs:

@@ -14,6 +14,22 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _plan_nodes(node) -> list:
+    """Every node of a JVM physical plan, pre-order, looking through the
+    adaptive wrapper to its current plan."""
+    if node.nodeName() == "AdaptiveSparkPlan":
+        node = node.executedPlan()
+    kids = node.children()
+    return [node] + [
+        n for i in range(kids.size()) for n in _plan_nodes(kids.apply(i))
+    ]
+
+
+def _output_names(node) -> set[str]:
+    out = node.output()
+    return {out.apply(i).name() for i in range(out.size())}
+
+
 @pytest.fixture(scope="module")
 def sfd(sf_dir):
     return sf_dir
@@ -263,10 +279,17 @@ def test_dup_fraction_narrow_rows_only(spark, sfd):
     df = corpus.q_dup_fraction(spark, sfd)
     p = _plan(df)
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
-    # every Exchange input is narrow: no plan node shuffles `text`
-    for frag in p.split("Exchange")[1:]:
-        assert "text#" not in frag.split("+- ")[1].split("\n")[0] \
-            if "+- " in frag else True
+    nodes = _plan_nodes(df._jdf.queryExecution().executedPlan())
+    exchanges = [n for n in nodes if n.nodeName().endswith("Exchange")]
+    assert exchanges  # the walk sees the shuffles and the broadcast
+    # the rows every Exchange (shuffle or broadcast, at any depth) ships
+    # are its input's output: text is never among them
+    for ex in exchanges:
+        assert "text" not in _output_names(ex.child()), ex.toString()
+    # and text leaves only the scans, straight into the window generator
+    for n in nodes:
+        if "text" in _output_names(n):
+            assert n.nodeName().startswith("Scan"), n.nodeName()
 
 
 def test_asof_join_is_window_not_join(spark, sfd):
